@@ -1,5 +1,7 @@
 """Loader/graph-build parity vs the oracle loader (quirk tests, SURVEY §1.3)."""
 
+from contextlib import contextmanager
+
 import numpy as np
 
 from conftest import SMALL_EDGES
@@ -7,9 +9,13 @@ from oracle import load_edges as oracle_load
 
 from web_search_pagerank_project_spark import build_graph
 from web_search_pagerank_project_spark.operators.graph_build import (
+    ROWS_PER_PARTITION,
+    GraphTables,
     dangling_vertices,
     in_degrees,
+    loop_partitions,
     out_degrees,
+    task_slots,
 )
 
 
@@ -163,3 +169,71 @@ def test_save_load_graph_roundtrip(spark, tmp_path):
         assert np.isclose(r1[i], r2[i], atol=1e-15)
     g.unpersist()
     g2.unpersist()
+
+
+# ---- loop partitions: one count per graph, sized from its edges ----
+
+
+@contextmanager
+def session_shuffle_partitions(spark, n):
+    """Run a block with ``spark.sql.shuffle.partitions`` (the partition
+    rule's cap) set to ``n``; the conftest session uses 4."""
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def test_loop_partitions_slot_floor_and_session_cap(spark):
+    slots = task_slots(spark)
+    assert slots == 4  # conftest: local[4]
+    with session_shuffle_partitions(spark, 32):
+        assert loop_partitions(spark, 0) == slots
+        assert loop_partitions(spark, 10) == slots
+        assert loop_partitions(spark, 6 * ROWS_PER_PARTITION) == 6
+        assert loop_partitions(spark, 6 * ROWS_PER_PARTITION + 1) == 7
+        assert loop_partitions(spark, 32 * ROWS_PER_PARTITION + 1) == 32
+        assert loop_partitions(spark, 10**12) == 32
+    # the cap wins over the slot floor
+    with session_shuffle_partitions(spark, 2):
+        assert loop_partitions(spark, 10) == 2
+
+
+def test_build_load_update_carry_one_partition_count(spark, tmp_path):
+    from web_search_pagerank_project_spark import update_graph
+    from web_search_pagerank_project_spark.operators.graph_build import (
+        load_graph,
+        save_graph,
+    )
+
+    delta = spark.createDataFrame([("1", "6"), ("7", "1")], "src string, dst string")
+    with session_shuffle_partitions(spark, 32):
+        g = build_graph(
+            spark.createDataFrame(SMALL_EDGES, "src string, dst string"),
+            keep_mult=True,
+        )
+        save_graph(g, str(tmp_path / "g"))
+        g2 = load_graph(spark, str(tmp_path / "g"))
+        g3 = update_graph(g2, delta)
+        graphs = (g, g2, g3)
+        # a small graph gets the slot floor, not the session's 32
+        assert [x.partitions for x in graphs] == [task_slots(spark)] * 3
+        assert [x.edges.rdd.getNumPartitions() for x in graphs] == [x.partitions for x in graphs]
+        # explicit counts stay overrides
+        assert load_graph(spark, str(tmp_path / "g"), num_partitions=5).partitions == 5
+        g4 = update_graph(g2, delta, num_partitions=3)
+        assert g4.partitions == g4.edges.rdd.getNumPartitions() == 3
+    assert g3.n == g.n + 1
+    for x in graphs + (g4,):
+        x.unpersist()
+
+
+def test_graph_tables_without_partitions_sizes_from_edges(spark):
+    g = build(spark, SMALL_EDGES, num_partitions=3)
+    assert g.partitions == 3
+    with session_shuffle_partitions(spark, 32):
+        manual = GraphTables(g.vertices, g.edges, g.n)
+        assert manual.partitions == loop_partitions(spark, g.edges.count()) == 4
+    assert GraphTables(g.vertices, g.edges, g.n, 7).partitions == 7

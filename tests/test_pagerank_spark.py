@@ -134,3 +134,78 @@ def test_salted_aggregation_same_result(spark):
     )
     for u in scores_plain:
         assert np.isclose(scores_plain[u], scores_salted[u], atol=1e-12)
+
+
+# ---- execution plan: partitions and shuffles of the iteration ----
+
+
+def _record_calls(monkeypatch, cls, names, log):
+    """Append (name, DataFrame) to ``log`` on every call of the methods."""
+    for name in names:
+        orig = getattr(cls, name)
+
+        def wrapper(self, *a, _orig=orig, _name=name, **k):
+            log.append((_name, self))
+            return _orig(self, *a, **k)
+
+        monkeypatch.setattr(cls, name, wrapper)
+
+
+def _shuffle_exchanges(jplan) -> int:
+    """Shuffle exchanges of an executed physical plan (AQE: its final plan).
+    Cached relations are not children, so their build is not counted."""
+    name = jplan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return _shuffle_exchanges(jplan.executedPlan())
+    if name.endswith("QueryStageExec"):
+        return _shuffle_exchanges(jplan.plan())
+    children = jplan.children()
+    return int(name == "ShuffleExchangeExec") + sum(
+        _shuffle_exchanges(children.apply(i)) for i in range(children.size())
+    )
+
+
+def test_pagerank_pins_statics_at_graph_partitions(spark, monkeypatch):
+    df = spark.createDataFrame(SMALL_EDGES, "src string, dst string")
+    graph = build_graph(df, num_partitions=3)
+    calls = []
+    _record_calls(monkeypatch, type(df), ["localCheckpoint"], calls)
+    pagerank(graph, max_iterations=2)
+    monkeypatch.undo()
+    # a cold run pins the teleport vector, the dangling set and x0 first
+    pins = [d._jdf.queryExecution().executedPlan().outputPartitioning() for _, d in calls[:3]]
+    assert [p.numPartitions() for p in pins] == [3, 3, 3]
+    graph.unpersist()
+
+
+def test_pagerank_iteration_shuffle_exchanges(spark, monkeypatch):
+    """Shuffles of one iteration on the default session's AQE: the new
+    iterate's checkpoint (SpMV join, contribution aggregate, teleport join)
+    and the residual action. Under AQE the checkpointed iterates carry no
+    partitioning, so the residual join re-shuffles both of them. The bound
+    is the count the engine has today; a change that removes an exchange
+    lowers it."""
+    df = spark.createDataFrame(SMALL_EDGES, "src string, dst string")
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    calls = []
+    try:
+        graph = build_graph(df)
+        _record_calls(monkeypatch, type(df), ["localCheckpoint", "collect"], calls)
+        pagerank(graph, max_iterations=2)
+    finally:
+        monkeypatch.undo()
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    # the last action is the second iteration's residual; the checkpoint
+    # before it is that iteration's new iterate
+    (_, residual), (_, iterate) = calls[-1], calls[-2]
+    assert (calls[-1][0], calls[-2][0]) == ("collect", "localCheckpoint")
+    counts = [
+        _shuffle_exchanges(d._jdf.queryExecution().executedPlan())
+        for d in (iterate, residual)
+    ]
+    # iterate: the iterate to the edges' partitioning, the contribution
+    # aggregate, the teleport vector to the contributions'; residual: both
+    # iterates, the dangling set, the global sum
+    assert counts[0] <= 3 and counts[1] <= 4, counts
+    graph.unpersist()

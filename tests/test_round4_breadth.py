@@ -137,6 +137,19 @@ def test_msbfs_duplicate_seed_bits_merge(spark):
     graph.unpersist()
 
 
+def test_msbfs_rejects_edges_prepared_for_the_other_direction(spark):
+    from web_search_pagerank_project_spark.operators.msbfs import _prepare_wave_edges
+
+    graph = build(spark, [("a", "b"), ("b", "c")])
+    backward = _prepare_wave_edges(graph, "dst_id", "src_id", graph.partitions)
+    with pytest.raises(ValueError, match="prepared_edges"):
+        ms_bfs_bits(graph, [0], direction="forward", prepared_edges=backward)
+    # the matching orientation is accepted
+    assert ms_bfs_bits(graph, [0], direction="backward", prepared_edges=backward).count() == 1
+    backward.unpersist()
+    graph.unpersist()
+
+
 # ---- HyperBall neighborhood function ----
 
 

@@ -134,7 +134,7 @@ def neighborhood_function(
     Deterministic given ``hash_col``; exact-replayable by the SQL oracle
     with the default LCG hash."""
     spark = graph.edges.sparkSession
-    npart = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    npart = graph.partitions
     rcols = [f"r{jj}" for jj in range(m)]
 
     # partitioned ONCE by the per-round join key (dst_id): the frontier
@@ -241,8 +241,7 @@ def hyperball_centralities(
     estimator (registers, deltas, divisions) is exactly replayable by the
     ANSI-SQL oracle, same technique as ``neighborhood_function``.
     """
-    spark = graph.edges.sparkSession
-    npart = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    npart = graph.partitions
     rcols = [f"r{jj}" for jj in range(m)]
 
     edges = (

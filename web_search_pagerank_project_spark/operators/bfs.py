@@ -50,7 +50,7 @@ def bfs_distances(
     if (seed_predicate is None) == (seed_ids is None):
         raise ValueError("provide exactly one of seed_predicate / seed_ids")
     spark = graph.edges.sparkSession
-    npart = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    npart = graph.partitions
 
     if direction == "forward":
         from_col, to_col = "src_id", "dst_id"

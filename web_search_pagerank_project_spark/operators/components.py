@@ -86,8 +86,7 @@ def connected_components(
     hash-partitioned by src_id and persisted, or every round's frontier
     join pays a full edge exchange.
     """
-    spark = graph.edges.sparkSession
-    num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    num_partitions = graph.partitions
     external_sym = symmetric_edges is not None
     if external_sym:
         sym = symmetric_edges.select("src_id", "dst_id")
@@ -331,7 +330,7 @@ def build_minlabel_blocks(
     if ce < 1:
         raise ValueError("chunk_edges must be >= 1")
     spark = graph.edges.sparkSession
-    p = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    p = graph.partitions
     bkeys = balanced_block_keys(k, p)
 
     def to_block(key, pdf: pd.DataFrame) -> pd.DataFrame:
@@ -466,7 +465,7 @@ def connected_components_csr(
     if n == 0:
         raise ValueError("empty graph")
     if blocks is None:
-        k = num_blocks or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+        k = num_blocks or graph.partitions
         blocks = build_minlabel_blocks(graph, k)
     else:
         k = int(blocks.select("k").first()["k"])

@@ -78,7 +78,7 @@ ws_pagerank.py:121-178, float64): L2-normalized v, x0 = 1/sqrt(n), no
 re-normalization, L2 residual stop. Tests cross-check CSR vs DataFrame vs
 the NumPy oracle at 1e-12-level agreement on small graphs.
 
-Scale notes: K defaults to ``spark.sql.shuffle.partitions``. At 10^12-edge
+Scale notes: K defaults to the graph's ``partitions``. At 10^12-edge
 scale K grows with the cluster so each block's arrays stay ~100-500 MB
 (nnz/K edges); block rows are Arrow-serialized, so executors never hold the
 whole graph. A mega-hub dst collects at most one packed partial per block
@@ -194,7 +194,7 @@ def build_csr_blocks(graph: GraphTables, num_blocks: int) -> DataFrame:
     """
     k = num_blocks
     spark = graph.edges.sparkSession
-    p = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    p = graph.partitions
     bkeys = balanced_block_keys(k, p)
 
     def to_block(key, pdf: pd.DataFrame) -> pd.DataFrame:
@@ -396,9 +396,7 @@ def pagerank_csr(
 
     own_blocks = blocks is None
     if blocks is None:
-        k = num_blocks or int(
-            spark.conf.get("spark.sql.shuffle.partitions", "32")
-        )
+        k = num_blocks or graph.partitions
         blocks = build_csr_blocks(graph, k)
     else:
         k = _blocks_k(blocks)

@@ -71,9 +71,9 @@ def _widen(df: DataFrame) -> DataFrame:
     one partition, serializing the whole vectorized UDF on one task).
     Left untouched when the input already has enough partitions — at real
     scale the table arrives with thousands and a repartition would only
-    add a shuffle."""
-    spark = df.sparkSession
-    target = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    add a shuffle. The target is the session's default parallelism (the
+    cluster's cores unless ``spark.default.parallelism`` sets it)."""
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < max(2, target // 2):
         return df.repartition(target)
     return df

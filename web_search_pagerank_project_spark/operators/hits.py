@@ -103,13 +103,12 @@ def hits(
 ) -> HitsResult:
     """Run HITS on a built graph; stops at the first iteration whose
     authority-vector L2 delta is below ``epsilon``."""
-    spark = graph.edges.sparkSession
     n = graph.n
     if n == 0:
         raise ValueError("empty graph")
     if max_iterations < 1:
         raise ValueError("max_iterations must be >= 1")
-    parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    parts = graph.partitions
 
     def _pin(df: DataFrame) -> DataFrame:
         return df.repartition(parts, "id").localCheckpoint(eager=False)

@@ -57,7 +57,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .graph_build import GraphTables, assign_dense_ids, drop_bad_urls
+from .graph_build import (
+    GraphTables,
+    assign_dense_ids,
+    drop_bad_urls,
+    loop_partitions,
+)
 
 __all__ = ["update_graph"]
 
@@ -75,24 +80,31 @@ def update_graph(
     updatable this way (the reference's threshold depends on global
     pre-filter in-degrees, which a delta shifts for every vertex): rebuild
     instead.
+
+    num_partitions: the updated graph's loop partition count; left out,
+    :func:`~.graph_build.loop_partitions` sets it from the base's edges
+    plus the delta's rows.
     """
     if "mult" not in graph.edges.columns:
         raise ValueError(
             "update_graph needs the raw multiplicities: build the base "
             "graph with build_graph(..., keep_mult=True)"
         )
-    spark = graph.edges.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-
     clean = drop_bad_urls(edge_delta)
     if cache:
         clean = clean.persist()
+    if num_partitions is None:
+        # base edges + delta rows bound the merged edges: one count job,
+        # which also fills clean's cache
+        rows = graph.edges.select().unionAll(clean.select()).count()
+        num_partitions = loop_partitions(graph.edges.sparkSession, rows)
+    # later stages read the delta in the graph's partitions
+    links = clean.coalesce(num_partitions)
 
     # new urls only — work is proportional to the delta, not the snapshot
     delta_urls = (
-        clean.select(F.col("src").alias("url"))
-        .unionAll(clean.select(F.col("dst").alias("url")))
+        links.select(F.col("src").alias("url"))
+        .unionAll(links.select(F.col("dst").alias("url")))
         .distinct()
     )
     new_urls = delta_urls.join(
@@ -114,7 +126,7 @@ def update_graph(
     # when small; at scale these are the same two equi-joins a fresh build
     # pays, but over delta-sized input)
     e = (
-        clean.join(vertices.withColumnRenamed("url", "src"), "src")
+        links.join(vertices.withColumnRenamed("url", "src"), "src")
         .withColumnRenamed("id", "src_id")
         .join(vertices.withColumnRenamed("url", "dst"), "dst")
         .withColumnRenamed("id", "dst_id")
@@ -149,4 +161,6 @@ def update_graph(
         merged.count()
         clean.unpersist()
 
-    return GraphTables(vertices=vertices, edges=merged, n=graph.n + n_new)
+    return GraphTables(
+        vertices=vertices, edges=merged, n=graph.n + n_new, partitions=num_partitions
+    )

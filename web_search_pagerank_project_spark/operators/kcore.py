@@ -66,9 +66,8 @@ def k_core(
     if k < 1:
         raise ValueError("k must be >= 1")
     spark = graph.edges.sparkSession
-    parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
-    sym = _symmetrized(graph, parts)  # persisted; each undirected edge twice
+    sym = _symmetrized(graph, graph.partitions)  # persisted; each undirected edge twice
     edges = sym
     try:
         prev_n = None

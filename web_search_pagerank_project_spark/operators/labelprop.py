@@ -29,8 +29,7 @@ def label_propagation(
     verbose: bool = False,
 ) -> DataFrame:
     """Returns (id: long, label: long)."""
-    spark = graph.edges.sparkSession
-    num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    num_partitions = graph.partitions
     sym = _symmetrized(graph, num_partitions)
 
     # same iterative-join discipline as pagerank.py / components.py: labels

@@ -50,8 +50,7 @@ def common_neighbors_topk(
     ``max_center_degree`` caps wedge centers (see module docstring); None
     means uncapped — fine for tests/small graphs, set a tau for web scale.
     """
-    spark = graph.edges.sparkSession
-    npart = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    npart = graph.partitions
     und = _undirected_edges(graph).persist()
     deg = _undirected_degrees(und)
 

@@ -92,8 +92,14 @@ def ms_bfs_bits(
         from_col, to_col = "dst_id", "src_id"
     else:
         raise ValueError(f"direction must be forward|backward, got {direction!r}")
+    if prepared_edges is not None and prepared_edges.columns[:1] != [from_col]:
+        raise ValueError(
+            f"prepared_edges leads with {prepared_edges.columns[:1]}, but a "
+            f"{direction} wave joins on {from_col!r}: prepare the edges for "
+            "this direction"
+        )
     spark = graph.edges.sparkSession
-    npart = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    npart = graph.partitions
 
     owns_edges = prepared_edges is None
     edges = (
@@ -198,8 +204,7 @@ def harmonic_centrality(
     estimator covers every vertex in one register sweep per diameter
     round.
     """
-    spark = graph.edges.sparkSession
-    npart = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    npart = graph.partitions
     from_col = "src_id" if direction == "forward" else "dst_id"
     to_col = "dst_id" if direction == "forward" else "src_id"
 

@@ -203,16 +203,22 @@ def pagerank(
 
     edges = graph.edges  # (src_id, dst_id, weight) persisted, hashed by src_id
 
-    # All per-iteration tables live in ONE hash(id, P) partitioning (P = the
-    # edge table's contract partition count): plain localCheckpoint (unlike
-    # cut_lineage) carries outputPartitioning into the LogicalRDD, so the
-    # statics below and the iterate stay co-partitioned across iterations
-    # and EnsureRequirements inserts no exchange for the v/dangling/residual
-    # joins — the only per-step shuffle left is the contribution aggregate.
+    # The statics below and x0 are pinned hash(id, P), P = graph.partitions
+    # (the edge table's partition count), so every shuffle that reads them
+    # runs P map tasks. What else the pin buys depends on AQE. With AQE off,
+    # plain localCheckpoint carries hash(id, P) into its LogicalRDD and a
+    # join of two pins at P needs no exchange. With AQE on (get_spark's
+    # default) the checkpoint carries no partitioning, and the executed plans
+    # of one iteration (Spark 4.1) hold 7 shuffle exchanges: the SpMV join
+    # shuffles the iterate to the edges' partitioning; the contribution
+    # aggregate and the teleport join shuffle at the session's shuffle
+    # partitions (AQE coalesces them); the residual action shuffles both
+    # iterates and the dangling set, then sums. tests/test_pagerank_spark.py
+    # holds that count as a bound.
     # The DF loop can safely keep plain localCheckpoint stats: its plans
     # have Aggregate barriers, which clamp the inherited-sizeInBytes
     # squaring that forces the CSR kernel to cut_lineage (lineage.py doc).
-    parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    parts = graph.partitions
 
     def _pin(df: DataFrame) -> DataFrame:
         return df.repartition(parts, "id").localCheckpoint(eager=False)
@@ -310,10 +316,9 @@ def pagerank(
                         + F.lit(alpha) * F.coalesce(F.col("contrib"), F.lit(0.0))
                     ).alias("x"),
                 )
-                # plain checkpoint: lineage cut AND hash(id, P) partitioning
-                # carried to the next step (stream side of the SHJ is base,
-                # which is pinned) — the next SpMV/residual joins need no
-                # exchange on the iterate. Lazy on purpose (round-4 probe):
+                # plain checkpoint: cuts the lineage; the next SpMV and
+                # residual joins re-shuffle the iterate under AQE (see the
+                # pins above). Lazy on purpose (round-4 probe):
                 # fused PR batches do NOT recompute the iterate (task counts
                 # identical lazy vs eager), and eager intermediate jobs only
                 # serialize the batch

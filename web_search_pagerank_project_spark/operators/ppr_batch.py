@@ -90,12 +90,11 @@ def pagerank_batch(
     for k in keys:
         if not k.isidentifier():
             raise ValueError(f"key {k!r} is not a valid column-name suffix")
-    spark = graph.edges.sparkSession
     n = graph.n
     if n == 0:
         raise ValueError("empty graph")
     edges = graph.edges  # persisted, hashed by src_id (build_graph contract)
-    parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    parts = graph.partitions
     a = float(alpha)
 
     def _pin(df: DataFrame) -> DataFrame:

@@ -83,24 +83,6 @@ def _persist_count(df: DataFrame) -> DataFrame:
     return df
 
 
-def _loop_partitions(graph: GraphTables, rows_per_partition: int = 250_000) -> int:
-    """Right-size the fixpoint loops' partition count from the EDGE count,
-    clamped to the session setting. SCC round state is vertex/frontier-sized
-    and the explicit repartitions below propagate through the loops' SHJ
-    co-partitioning — at the session default a 100k-vertex graph pays ~200
-    task launches per round for ~1.5k rows each, and the launch overhead
-    dominated the measured wall (sf0.1: trim 18s at 64 partitions, 7s at
-    8). A real cluster's big graphs hit the session clamp and keep their
-    configured parallelism; the derivation only shrinks the small tail."""
-    spark = graph.edges.sparkSession
-    conf_npart = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    try:
-        n_e = graph.edges.count()  # cached by build_graph — cheap job
-    except Exception:
-        return conf_npart
-    return max(2, min(conf_npart, -(-n_e // rows_per_partition)))
-
-
 def _semi_both(edges: DataFrame, verts: DataFrame) -> DataFrame:
     """Edges whose BOTH endpoints are in verts(id). Semi-joins stay
     JVM-side; verts is the shrinking remaining set."""
@@ -122,8 +104,7 @@ def strongly_connected_components(
     component. Raises if the phase/round budget is exhausted before the
     vertex set empties (raise_on_cap=False returns the partial labels of
     whatever finalized, matching components.py's cap contract)."""
-    spark = graph.edges.sparkSession
-    npart = _loop_partitions(graph)
+    npart = graph.partitions
 
     edges0 = (
         graph.edges.select("src_id", "dst_id")
@@ -447,7 +428,7 @@ def bowtie_classes(
     if scc_labels is None:
         scc_labels = strongly_connected_components(graph).labels
     spark = graph.edges.sparkSession
-    npart = _loop_partitions(graph)
+    npart = graph.partitions
     edges = _persist_count(
         graph.edges.select("src_id", "dst_id")
         .filter(F.col("src_id") != F.col("dst_id"))

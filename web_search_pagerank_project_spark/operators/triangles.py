@@ -79,9 +79,7 @@ def _closed_wedges(oriented: DataFrame) -> DataFrame:
 
 def triangle_count(graph: GraphTables) -> int:
     """Total number of distinct undirected triangles in the graph."""
-    spark = graph.edges.sparkSession
-    num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    oriented = _oriented_edges(graph, num_partitions)
+    oriented = _oriented_edges(graph, graph.partitions)
     count = _closed_wedges(oriented).count()
     oriented.unpersist()
     return count
@@ -90,9 +88,7 @@ def triangle_count(graph: GraphTables) -> int:
 def triangles_per_vertex(graph: GraphTables) -> DataFrame:
     """(id: long, triangles: long) — number of triangles incident to each
     vertex (each triangle counts once per corner)."""
-    spark = graph.edges.sparkSession
-    num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    oriented = _oriented_edges(graph, num_partitions)
+    oriented = _oriented_edges(graph, graph.partitions)
 
     tris = _closed_wedges(oriented)
     corners = (
@@ -115,9 +111,7 @@ def clustering_coefficient(graph: GraphTables) -> DataFrame:
     undirected graph; 0.0 for deg < 2 (the usual convention). Same
     degree-ordered wedge plan as triangle counting — the O(sqrt(m))
     oriented out-degree bound is what keeps the wedge join web-scale."""
-    spark = graph.edges.sparkSession
-    num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    oriented = _oriented_edges(graph, num_partitions)
+    oriented = _oriented_edges(graph, graph.partitions)
     tris = _closed_wedges(oriented)
     corners = (
         tris.select(F.col("w_a").alias("id"))

@@ -79,7 +79,7 @@ def random_walks(
     if walks_per_vertex < 1:
         raise ValueError("walks_per_vertex must be >= 1")
     spark = graph.edges.sparkSession
-    npart = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    npart = graph.partitions
 
     # per-source cumulative intervals, one running-sum window in the edge
     # table's own hash(src) partitioning; ord desc rn==1 marks the LAST

@@ -33,7 +33,16 @@ def build_parser() -> argparse.ArgumentParser:
     parser.add_argument("--verbose", action="store_true")
     # engine extensions
     parser.add_argument("--master", default=None)
-    parser.add_argument("--partitions", type=int, default=None)
+    parser.add_argument(
+        "--partitions",
+        type=int,
+        default=None,
+        help="spark.sql.shuffle.partitions (default $WSPR_SHUFFLE_PARTITIONS "
+        "or 32): the partitions of "
+        "Spark's own shuffles and the cap of the graph's loop partitions, "
+        "which are sized from the edge count (one per 250k edges, at least "
+        "one per task slot)",
+    )
     parser.add_argument("--checkpoint_dir", default=None)
     parser.add_argument(
         "--algorithm",

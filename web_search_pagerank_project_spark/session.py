@@ -4,6 +4,12 @@ Defaults follow the scale design in SURVEY.md §4: AQE on (runtime re-planning,
 skew-join splitting, partition coalescing), Arrow on (all Python boundaries are
 vectorized pandas/Arrow UDFs per BASELINE.json input_hint), shuffle partitions
 sized for the local test harness but overridable for cluster runs.
+
+Graph loops do not use the shuffle partition setting directly: a graph's
+loops size their partitions from its edge count, at least one per task slot
+(``operators.graph_build.loop_partitions``), and ``spark.sql.shuffle.partitions``
+is their cap. It still sets the partitions of every shuffle Spark plans on its
+own (joins and aggregations without an explicit repartition).
 """
 
 from __future__ import annotations
