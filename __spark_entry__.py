@@ -325,31 +325,36 @@ def _hits_oracle_sql(iters: int = 3) -> str:
     deduplicated directed edge structure (pw's (src, dst) pairs — already
     duplicate-collapsed), h0 = 1/sqrt(n), then per iteration
     a = norm2(A^T h), h = norm2(A a). Per-step L2 normalization keeps every
-    compared value O(1), so ROUND(x, 6) absolute tolerance is safe."""
+    compared value O(1), so ROUND(x, 6) absolute tolerance is safe.
+
+    Every CTE is MATERIALIZED: each is referenced two or three times (the
+    norm and its normalized copy both read the raw vector), so inlined CTEs
+    replicate the upstream chain per reference and DuckDB runs out of
+    memory before the third iteration finishes."""
     blocks = []
     for i in range(1, iters + 1):
         prev = f"h{i - 1}"
         blocks.append(f"""
-        ar{i} AS (
+        ar{i} AS MATERIALIZED (
             SELECT verts.url, COALESCE(c.v, 0) AS x FROM verts LEFT JOIN (
                 SELECT ed.dst AS url, SUM({prev}.s) AS v
                 FROM ed JOIN {prev} ON ed.src = {prev}.url GROUP BY ed.dst
             ) c ON verts.url = c.url
         ),
-        an{i} AS (SELECT sqrt(SUM(x * x)) AS nrm FROM ar{i}),
-        a{i} AS (
+        an{i} AS MATERIALIZED (SELECT sqrt(SUM(x * x)) AS nrm FROM ar{i}),
+        a{i} AS MATERIALIZED (
             SELECT url, CASE WHEN (SELECT nrm FROM an{i}) > 0
                              THEN x / (SELECT nrm FROM an{i}) ELSE 0.0 END AS s
             FROM ar{i}
         ),
-        hr{i} AS (
+        hr{i} AS MATERIALIZED (
             SELECT verts.url, COALESCE(c.v, 0) AS x FROM verts LEFT JOIN (
                 SELECT ed.src AS url, SUM(a{i}.s) AS v
                 FROM ed JOIN a{i} ON ed.dst = a{i}.url GROUP BY ed.src
             ) c ON verts.url = c.url
         ),
-        hn{i} AS (SELECT sqrt(SUM(x * x)) AS nrm FROM hr{i}),
-        h{i} AS (
+        hn{i} AS MATERIALIZED (SELECT sqrt(SUM(x * x)) AS nrm FROM hr{i}),
+        h{i} AS MATERIALIZED (
             SELECT url, CASE WHEN (SELECT nrm FROM hn{i}) > 0
                              THEN x / (SELECT nrm FROM hn{i}) ELSE 0.0 END AS s
             FROM hr{i}
@@ -358,7 +363,7 @@ def _hits_oracle_sql(iters: int = 3) -> str:
         _GRAPH_SQL_PREFIX
         + f"""
         , ed AS (SELECT src, dst FROM pw),
-        h0 AS (SELECT url, 1.0 / sqrt((SELECT n FROM nn)) AS s FROM verts),
+        h0 AS MATERIALIZED (SELECT url, 1.0 / sqrt((SELECT n FROM nn)) AS s FROM verts),
         """
         + ",".join(blocks)
         + f"""

@@ -111,6 +111,39 @@ def test_update_requires_mult(spark):
     g0.unpersist()
 
 
+def test_weighted_base_cannot_keep_mult(spark):
+    """update_graph merges link counts, so a base whose mult holds summed
+    weights would come out silently wrong: build_graph refuses it."""
+    df = spark.createDataFrame(
+        [(s, d, 2) for s, d in BASE], "src string, dst string, w int"
+    )
+    with pytest.raises(ValueError, match="weight_col"):
+        build_graph(df, keep_mult=True, weight_col="w")
+
+
+def test_update_caches_delta_in_graph_partitions(spark, monkeypatch):
+    """A delta that ends in a shuffle is cached in the graph's partitions,
+    not in the session's shuffle partitions: the explicit exchange makes
+    the delta's own stages intermediate ones that AQE can size."""
+    g0 = build(spark, BASE, keep_mult=True, num_partitions=2)
+    delta = spark.createDataFrame(DELTA, "src string, dst string").distinct()
+    assert delta.rdd.getNumPartitions() != g0.partitions
+    persisted = []
+    orig = type(delta).persist
+
+    def record(self, *a, **k):
+        persisted.append(self)
+        return orig(self, *a, **k)
+
+    monkeypatch.setattr(type(delta), "persist", record)
+    g1 = update_graph(g0, delta)
+    monkeypatch.undo()
+    # the first table update_graph caches is the cleaned delta
+    assert persisted[0].rdd.getNumPartitions() == g0.partitions
+    for g in (g0, g1):
+        g.unpersist()
+
+
 def _ranks(res):
     return {r["id"]: r["rank"] for r in res.ranks.collect()}
 

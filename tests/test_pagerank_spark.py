@@ -127,6 +127,34 @@ def test_max_iterations_cap(spark):
     assert_matches_oracle(scores, {inv[i]: x[i] for i in range(g.n)}, atol=1e-12)
 
 
+def test_sparse_personalization_keeps_every_vertex(spark):
+    """Vertices a sparse v leaves out get v = 0: the ranking must equal the
+    dense vector's per url, not drop them."""
+    df = spark.createDataFrame(SMALL_EDGES, "src string, dst string")
+    graph = build_graph(df)
+    v = make_personalization_vector(graph, "4")
+    dense = pagerank(graph, v).by_url(graph).collect()
+    sparse = pagerank(graph, v.filter("v > 0")).by_url(graph).collect()
+    want = {r["url"]: r["rank"] for r in dense}
+    got = {r["url"]: r["rank"] for r in sparse}
+    assert got.keys() == want.keys() and len(got) == graph.n
+    for url, rank in want.items():
+        assert abs(got[url] - rank) <= 1e-12, (url, got[url], rank)
+    graph.unpersist()
+
+
+def test_bad_personalization_vectors_raise(spark):
+    df = spark.createDataFrame(SMALL_EDGES, "src string, dst string")
+    graph = build_graph(df)
+    v = spark.createDataFrame([(0, 0.5), (graph.n + 7, 0.5)], "id long, v double")
+    with pytest.raises(ValueError, match="outside the graph"):
+        pagerank(graph, v, max_iterations=2)
+    zero = v.selectExpr("id", "v * 0 AS v").filter("id = 0")
+    with pytest.raises(ValueError, match="zero norm"):
+        pagerank(graph, zero, max_iterations=2)
+    graph.unpersist()
+
+
 def test_salted_aggregation_same_result(spark):
     scores_plain, _ = spark_scores_by_url(spark, SMALL_EDGES, max_iterations=5)
     scores_salted, _ = spark_scores_by_url(
@@ -165,26 +193,32 @@ def _shuffle_exchanges(jplan) -> int:
     )
 
 
-def test_pagerank_pins_statics_at_graph_partitions(spark, monkeypatch):
+def test_pagerank_pins_one_state_table_and_runs_one_prologue_action(
+    spark, monkeypatch
+):
     df = spark.createDataFrame(SMALL_EDGES, "src string, dst string")
     graph = build_graph(df, num_partitions=3)
     calls = []
-    _record_calls(monkeypatch, type(df), ["localCheckpoint"], calls)
+    _record_calls(monkeypatch, type(df), ["localCheckpoint", "collect"], calls)
     pagerank(graph, max_iterations=2)
     monkeypatch.undo()
-    # a cold run pins the teleport vector, the dangling set and x0 first
-    pins = [d._jdf.queryExecution().executedPlan().outputPartitioning() for _, d in calls[:3]]
-    assert [p.numPartitions() for p in pins] == [3, 3, 3]
+    # the state table is the one pin; one aggregate action reads it before
+    # the first iteration's checkpoint
+    assert [name for name, _ in calls[:3]] == [
+        "localCheckpoint",
+        "collect",
+        "localCheckpoint",
+    ]
+    pin = calls[0][1]._jdf.queryExecution().executedPlan().outputPartitioning()
+    assert pin.numPartitions() == 3
     graph.unpersist()
 
 
 def test_pagerank_iteration_shuffle_exchanges(spark, monkeypatch):
     """Shuffles of one iteration on the default session's AQE: the new
-    iterate's checkpoint (SpMV join, contribution aggregate, teleport join)
-    and the residual action. Under AQE the checkpointed iterates carry no
-    partitioning, so the residual join re-shuffles both of them. The bound
-    is the count the engine has today; a change that removes an exchange
-    lowers it."""
+    iterate's checkpoint (SpMV join, the union's groupBy) and the residual
+    action (a global aggregate over that checkpoint). The bound is the count
+    the engine has today; a change that removes an exchange lowers it."""
     df = spark.createDataFrame(SMALL_EDGES, "src string, dst string")
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
@@ -204,8 +238,7 @@ def test_pagerank_iteration_shuffle_exchanges(spark, monkeypatch):
         _shuffle_exchanges(d._jdf.queryExecution().executedPlan())
         for d in (iterate, residual)
     ]
-    # iterate: the iterate to the edges' partitioning, the contribution
-    # aggregate, the teleport vector to the contributions'; residual: both
-    # iterates, the dangling set, the global sum
-    assert counts[0] <= 3 and counts[1] <= 4, counts
+    # iterate: the iterate to the edges' partitioning, the union of
+    # contributions and state rows into groupBy(id); residual: the global sum
+    assert counts[0] <= 2 and counts[1] <= 1, counts
     graph.unpersist()

@@ -93,9 +93,11 @@ def connected_components(
     else:
         sym = _symmetrized(graph, num_partitions)
 
-    # labels stay hash(id, P)-partitioned across rounds (plain localCheckpoint
-    # preserves outputPartitioning — cut_lineage would NOT, its rebuilt
-    # LogicalRDD loses the partitioning and every round would re-shuffle).
+    # With AQE off, labels stay hash(id, P)-partitioned across rounds (plain
+    # localCheckpoint preserves outputPartitioning — cut_lineage would NOT,
+    # its rebuilt LogicalRDD loses the partitioning). With AQE on
+    # (get_spark's default) the checkpoint carries no partitioning either,
+    # and every round re-shuffles the labels.
     # Inherited-stats growth is safe here empirically, not by clamping: the
     # size-only visitor clamps only EMPTY-grouping aggregates, and this
     # round's groupBy(dst_id) does not clamp — but measured sizeInBytes

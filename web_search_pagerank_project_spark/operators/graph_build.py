@@ -224,7 +224,8 @@ def build_graph(
     keep_mult: carry the raw per-pair multiplicity as an extra ``mult``
     column on the edge table — required input for incremental snapshot
     maintenance (operators/incremental.py::update_graph), which must merge
-    multiplicities, not the outdeg-normalized weights.
+    multiplicities, not the outdeg-normalized weights. Not combinable with
+    ``weight_col`` (updates merge link counts, not summed weights).
 
     weight_col: treat each input row as carrying ``weight_col`` parallel
     links instead of 1 (e.g. the host graph's ``n_src_pages`` — rank hosts
@@ -236,6 +237,10 @@ def build_graph(
     num_partitions: the graph's loop partition count (``partitions``);
     left out, :func:`loop_partitions` sets it from the input's edge rows.
     """
+    if keep_mult and weight_col is not None:
+        # update_graph merges COUNT multiplicities into ``mult``; summed
+        # weights there would come out silently wrong after an update
+        raise ValueError("keep_mult=True cannot be combined with weight_col")
     # clean feeds BOTH the dictionary build and the edge encode; persisting it
     # saves a full re-scan/re-parse of the (gzipped CSV) source.
     clean = drop_bad_urls(edges)

@@ -92,7 +92,13 @@ def update_graph(
         )
     clean = drop_bad_urls(edge_delta)
     if cache:
-        clean = clean.persist()
+        # AQE never coalesces the last stage of a cached plan: a delta that
+        # ends in a shuffle (edges_from_pages' dedupe and extraction) would
+        # be computed in spark.sql.shuffle.partitions tasks, one python
+        # worker round each. The explicit exchange turns those stages into
+        # intermediate ones that AQE sizes, and caches the delta in the
+        # graph's partitions.
+        clean = clean.repartition(graph.partitions).persist()
     if num_partitions is None:
         # base edges + delta rows bound the merged edges: one count job,
         # which also fills clean's cache

@@ -100,8 +100,8 @@ def pagerank_batch(
     def _pin(df: DataFrame) -> DataFrame:
         return df.repartition(parts, "id").localCheckpoint(eager=False)
 
-    # one dense (id, v_<k>...) table: each column L2-normalized exactly as
-    # the single-vector kernel does (pagerank.py::_l2_normalize)
+    # one dense (id, v_<k>...) table: each column L2-normalized as the
+    # single-vector kernel does (v / ||v||_2 with the norm a literal)
     vtab = graph.vertices.select("id")
     for k in keys:
         vk = vs[k]
