@@ -125,17 +125,18 @@ _WALKS_ORACLE_CTE = f"""
                    END AS hi
             FROM wpe
         ),
-        wk(walk_id, step, id) AS (
-            SELECT id, 0, id FROM iu
+        wk(walk_id, step, id, s) AS (
+            SELECT id, 0, id, ((id % 2147483648) * 1103515245 + 12345)
+                              % 2147483648
+            FROM iu
             UNION ALL
-            SELECT w.walk_id, w.step + 1, c.dst_id
+            SELECT w.walk_id, w.step + 1, c.dst_id,
+                   (w.s * 1103515245 + 12345) % 2147483648
             FROM wk w JOIN wcum c ON w.id = c.src_id
             WHERE w.step < 4
-              AND c.lo <= (((w.walk_id % 2147483648) * 1103515245 + 12345
-                            + (w.step + 1) * 2654435761) % 2147483648)
+              AND c.lo <= ((w.s * 1103515245 + 12345) % 2147483648)
                           / 2147483648.0
-              AND (((w.walk_id % 2147483648) * 1103515245 + 12345
-                    + (w.step + 1) * 2654435761) % 2147483648)
+              AND ((w.s * 1103515245 + 12345) % 2147483648)
                   / 2147483648.0 < c.hi
         )
 """
@@ -1388,12 +1389,18 @@ def q_skipgram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_pagerank_batch_3iter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X24: batched multi-personalization PageRank (operators/ppr_batch.py)
-    — K rankings share ONE edge scan per round (topic-sensitive PageRank /
-    TrustRank shape; the reference runs one personalization per process,
-    ws_pagerank.py:115-139). Uniform + a topic vector in one batch; the
-    oracle joins two independent unrolled power methods, so each batch
-    column is hash-checked against its lone-run semantics."""
+    """X24: batched multi-personalization PageRank (operators/pagerank.py::
+    pagerank_batch) — K rankings share ONE edge scan per round
+    (topic-sensitive PageRank / TrustRank shape; the reference runs one
+    personalization per process, ws_pagerank.py:115-139).
+
+    The K vectors are K (v_k, x_k) column pairs of pagerank's one state
+    table: each round is one edges⋈state join and one groupBy(id) with K
+    sums, and the per-round action returns K residuals and K dangling
+    masses; pagerank itself is the K = 1 call of the same loop. Uniform + a
+    topic vector in one batch; the oracle joins two independent unrolled
+    power methods, so each batch column is hash-checked against its
+    lone-run semantics."""
     from web_search_pagerank_project_spark import (
         build_graph,
         make_personalization_vector,
@@ -1642,7 +1649,8 @@ def oracle_sql() -> dict[str, str]:
         """,
         # exact replay of random_walks (operators/walks.py): cumulative
         # intervals per source in dst_id order (last hi widened to 2.0),
-        # pure-integer LCG draw per (walk_id, step), recursive step join.
+        # per-walk pure-integer LCG state s carried by the recursive step
+        # join (seeded from walk_id, advanced once per step, draw s / M).
         # walk_id = vertex id (walks_per_vertex=1); output is integral +
         # urls, so there is no float in the compared columns at all.
         "random_walks": _WALKS_ORACLE_CTE

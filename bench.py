@@ -490,7 +490,7 @@ SCALE_EDGES = int(os.environ.get("WSPR_SCALE_EDGES", str(240_000_000)))
 SCALE_VERTS = int(os.environ.get("WSPR_SCALE_VERTS", str(2_000_000)))
 SCALE_ITERS = int(os.environ.get("WSPR_SCALE_ITERS", "6"))
 # 8 dense rounds (was 4): with the chunked kernel the per-round slope is
-# ~1.6-1.9 s at BOTH levels (tools/cc_slowmode_probe.py), so the one-time
+# ~1.6-1.9 s at BOTH levels (a per-session CC probe), so the one-time
 # tail (state init + posexplode + count) dominated a 4-round wall and its
 # own scaling noise swamped the slope's. A real 10^12-edge CC runs tens of
 # rounds; 8 keeps the measured quantity per-round throughput, which is
@@ -1039,7 +1039,7 @@ def _render_scaling_md(history: list[dict]) -> None:
     runs = rec["runs"]
     strong, weak = rec["strong"], rec["weak"]
 
-    # CC-shape bus probe (tools/bus_weak_probe.py --both), committed as
+    # CC-shape bus probe (a one-off script, since deleted), committed as
     # BENCH/bus_probe_cc.json. The probe runs the CC kernel's inner loop
     # (gather of an int64 label table + minimum.reduceat over the edge
     # stream) in P bare pinned processes — no Spark, no shuffle, no
@@ -1062,7 +1062,7 @@ def _render_scaling_md(history: list[dict]) -> None:
             f"weak-scales at **{cc_probe['weak_efficiency']:.2f}** on bare "
             f"pinned processes (T_2={cc_probe['wall_p2']:.2f}s vs "
             f"T_8={cc_probe['wall_p8']:.2f}s, min-of-3 per level, "
-            "quiet host; tools/bus_weak_probe.py --both, "
+            "quiet host; "
             "BENCH/bus_probe_cc.json) — the per-core label table "
             "(2 MB) stays cache-resident and the edge stream does not "
             "saturate the bus at 8 cores, so the HARDWARE imposes no "

@@ -17,6 +17,7 @@ from web_search_pagerank_project_spark import (
     build_graph,
     make_personalization_vector,
     pagerank,
+    pagerank_batch,
 )
 
 
@@ -193,14 +194,27 @@ def _shuffle_exchanges(jplan) -> int:
     )
 
 
+# both entry points run the one loop: pagerank (K = 1) and pagerank_batch
+# with a uniform and a topic column (K = 2) must execute the same plan.
+# The topic vector is built (one collect) before the calls are recorded.
+_RUNS = {
+    "pagerank": lambda graph, topic: pagerank(graph, max_iterations=2),
+    "pagerank_batch": lambda graph, topic: pagerank_batch(
+        graph, {"a": None, "b": topic}, max_iterations=2, epsilon=0.0
+    ),
+}
+
+
+@pytest.mark.parametrize("entry", sorted(_RUNS))
 def test_pagerank_pins_one_state_table_and_runs_one_prologue_action(
-    spark, monkeypatch
+    spark, monkeypatch, entry
 ):
     df = spark.createDataFrame(SMALL_EDGES, "src string, dst string")
     graph = build_graph(df, num_partitions=3)
+    topic = make_personalization_vector(graph, "4")
     calls = []
     _record_calls(monkeypatch, type(df), ["localCheckpoint", "collect"], calls)
-    pagerank(graph, max_iterations=2)
+    _RUNS[entry](graph, topic)
     monkeypatch.undo()
     # the state table is the one pin; one aggregate action reads it before
     # the first iteration's checkpoint
@@ -214,7 +228,8 @@ def test_pagerank_pins_one_state_table_and_runs_one_prologue_action(
     graph.unpersist()
 
 
-def test_pagerank_iteration_shuffle_exchanges(spark, monkeypatch):
+@pytest.mark.parametrize("entry", sorted(_RUNS))
+def test_pagerank_iteration_shuffle_exchanges(spark, monkeypatch, entry):
     """Shuffles of one iteration on the default session's AQE: the new
     iterate's checkpoint (SpMV join, the union's groupBy) and the residual
     action (a global aggregate over that checkpoint). The bound is the count
@@ -225,8 +240,9 @@ def test_pagerank_iteration_shuffle_exchanges(spark, monkeypatch):
     calls = []
     try:
         graph = build_graph(df)
+        topic = make_personalization_vector(graph, "4")
         _record_calls(monkeypatch, type(df), ["localCheckpoint", "collect"], calls)
-        pagerank(graph, max_iterations=2)
+        _RUNS[entry](graph, topic)
     finally:
         monkeypatch.undo()
         spark.conf.set("spark.sql.adaptive.enabled", aqe)

@@ -1,6 +1,6 @@
-"""Batched multi-personalization PageRank (operators/ppr_batch.py): K
-rankings through one edge scan per round, each column matching the
-single-vector kernel.
+"""Batched multi-personalization PageRank (operators/pagerank.py::
+pagerank_batch): K rankings through one edge scan per round, each column
+matching the single-vector kernel.
 
 Reference parity note: the reference runs ONE personalization per process
 (ws_pagerank.py:115-139); the batch kernel is scale-path surface
@@ -80,6 +80,11 @@ def test_batch_validation(spark):
     zero_v = graph.vertices.select("id", F.lit(0.0).alias("v"))
     with pytest.raises(ValueError, match="zero norm"):
         pagerank_batch(graph, {"z": zero_v}, max_iterations=1)
+    outside = spark.createDataFrame(
+        [(0, 0.5), (graph.n + 7, 0.5)], "id long, v double"
+    )
+    with pytest.raises(ValueError, match="outside the graph"):
+        pagerank_batch(graph, {"a": None, "o": outside}, max_iterations=1)
     graph.unpersist()
 
 

@@ -12,11 +12,13 @@ Centralities with HyperBall", 2013, §3).
 from __future__ import annotations
 
 import math
+import re
 
 import pandas as pd
 import pytest
 
 from conftest import SMALL_EDGES
+from test_pagerank_spark import _record_calls
 from test_round4_breadth import (
     _estimate_py,
     _init_reg,
@@ -98,6 +100,60 @@ def test_hyperball_rank_correlation_vs_exact(spark):
     graph.unpersist()
 
 
+def _cls(jplan) -> str:
+    return jplan.getClass().getSimpleName()
+
+
+def _plan_nodes(jplan):
+    """Every operator of an executed physical plan, parents first, through
+    AQE's final plan and its query stages (cached relations are leaves, so
+    the graph build behind them is not walked)."""
+    if _cls(jplan) == "AdaptiveSparkPlanExec":
+        yield from _plan_nodes(jplan.executedPlan())
+        return
+    if _cls(jplan).endswith("QueryStageExec"):
+        yield from _plan_nodes(jplan.plan())
+        return
+    yield jplan
+    children = jplan.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
+
+
+def test_hyperball_round_combines_registers_map_side(spark, monkeypatch):
+    """The plan of one round exactly as hyperball_centralities builds it
+    (the DataFrame its lineage cut checkpoints): the m register maxima are
+    combined map-side, in a partial aggregate right below the exchange, and
+    no Broadcast node carries register state — a driver-built broadcast of
+    the O(V) registers serializes on V."""
+    m = 16
+    graph = build(spark, rand_rows(11, n=25, m=60))
+    calls = []
+    _record_calls(monkeypatch, type(graph.edges), ["localCheckpoint"], calls)
+    hyperball_centralities(graph, m=m, max_t=1)
+    monkeypatch.undo()
+    # calls[0] pins the initial registers; calls[1] is round 1
+    nodes = list(_plan_nodes(calls[1][1]._jdf.queryExecution().executedPlan()))
+    below_exchange = [
+        next(
+            op
+            for op in _plan_nodes(node.children().apply(0))
+            if _cls(op) not in ("WholeStageCodegenExec", "InputAdapter")
+        ).simpleString(1000)
+        for node in nodes
+        if _cls(node) == "ShuffleExchangeExec"
+    ]
+    assert any(s.count("partial_max") >= m for s in below_exchange), below_exchange
+    register = re.compile(r"\b(n_)?r\d+#")
+    bcast = [
+        node.output().toString()
+        for node in nodes
+        if _cls(node).startswith("Broadcast")
+    ]
+    assert not [out for out in bcast if register.search(out)], bcast
+    graph.unpersist()
+
+
 def test_build_graph_weight_col(spark):
     """build_graph(weight_col=...): a row carries w parallel links instead
     of 1 — per-pair multiplicity = SUM(w), weights = mult/outdeg as usual;
@@ -152,12 +208,11 @@ def test_exact_harmonic_all_sources_warns(spark):
 from web_search_pagerank_project_spark.operators.walks import random_walks
 
 _WLCG_A, _WLCG_C, _WLCG_M = 1103515245, 12345, 1 << 31
-_WSTEP_MIX = 2654435761
 
 
 def _walk_oracle(graph_edges, ids_by_url, walk_length, walks_per_vertex):
     """Pure-python replay: cumulative intervals in dst order (last hi=2.0),
-    LCG draw per (walk_id, step)."""
+    one LCG state per walk, seeded from walk_id and advanced per step."""
     from collections import defaultdict
 
     outs = defaultdict(list)  # src_id -> [(dst_id, weight)] in dst order
@@ -178,11 +233,12 @@ def _walk_oracle(graph_edges, ids_by_url, walk_length, walks_per_vertex):
             wid = v * walks_per_vertex + j
             rows.add((wid, 0, v))
             cur = v
+            s = ((wid % _WLCG_M) * _WLCG_A + _WLCG_C) % _WLCG_M
             for step in range(1, walk_length + 1):
                 if cur not in cum:
                     break
-                r = ((wid % _WLCG_M) * _WLCG_A + _WLCG_C + step * _WSTEP_MIX) % _WLCG_M
-                r = r / float(_WLCG_M)
+                s = (s * _WLCG_A + _WLCG_C) % _WLCG_M
+                r = s / float(_WLCG_M)
                 nxt = None
                 for d, lo, hi in cum[cur]:
                     if lo <= r < hi:
@@ -208,6 +264,25 @@ def test_random_walks_exact_replay(spark, rows_seed):
     }
     exp = _walk_oracle(edges, ids, walk_length=5, walks_per_vertex=2)
     assert got == exp
+    graph.unpersist()
+
+
+def test_random_walks_draws_are_not_an_arithmetic_progression(spark):
+    """Every vertex links to all 64 vertices with weight 1/64 (exact in
+    float64), so a step's destination id is floor(64·draw). Draws affine in
+    the step would advance every walk by the same amount mod 1, so the
+    destination differences mod 64 of one walk would take at most two
+    adjacent values; successive LCG outputs spread over many."""
+    d = 64
+    urls = [f"u{i:02d}" for i in range(d)]
+    graph = build(spark, [(a, b) for a in urls for b in urls])
+    walks = {}
+    for r in random_walks(graph, walk_length=8).collect():
+        walks.setdefault(r["walk_id"], {})[r["step"]] = r["id"]
+    assert len(walks) == d and all(len(w) == 9 for w in walks.values())
+    for wid, w in walks.items():
+        diffs = {(w[t + 1] - w[t]) % d for t in range(1, 8)}
+        assert len(diffs) > 2, (wid, [w[t] for t in range(9)])
     graph.unpersist()
 
 

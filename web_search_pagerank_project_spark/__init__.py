@@ -15,9 +15,13 @@ from .session import get_spark
 from .sources.edges import read_edge_csv, read_edge_parquet, edges_from_dataframe
 from .operators.graph_build import GraphTables, build_graph
 from .operators.incremental import update_graph
-from .operators.ppr_batch import pagerank_batch, BatchPageRankResult
 from .operators.walks import random_walks
-from .operators.pagerank import pagerank, PageRankResult
+from .operators.pagerank import (
+    pagerank,
+    PageRankResult,
+    pagerank_batch,
+    BatchPageRankResult,
+)
 from .operators.csr_kernel import pagerank_csr, build_csr_blocks
 from .operators.components import (
     connected_components,

@@ -95,10 +95,10 @@ iteration has exactly one shuffle, keyed by block_out. (A K^1.5 variant —
 group-leader "carrier" rows piggybacked on the state exchange one
 iteration early — stays within the stage budget but threads a second
 lifecycle through state packing, checkpoint/resume and the first-iteration
-path.) Measured before buying either (scripts/measure_dang_fanout.py,
-local[32]): marginal cost over the fixed cogroup-stage floor is ~0.3 s/iter
-for K=512 (262k rows) and ~168 ns/row at K=4096 (16.7M rows) — and the
-measurement EXAGGERATES the kernel's exposure, because K=512 on the 2M-edge
+path.) Measured before buying either (one-off probe, local[32]): marginal
+cost over the fixed cogroup-stage floor is ~0.3 s/iter for K=512 (262k
+rows) and ~168 ns/row at K=4096 (16.7M rows) — and the measurement
+EXAGGERATES the kernel's exposure, because K=512 on the 2M-edge
 probe graph is 256x below the ~3M-edges/block design point. Normalized to a
 cluster at P=K=4096, the fan-out is 4,096 rows / 160 KiB per partition per
 iteration against 100-500 MB block arrays: sub-millisecond, invisible. The

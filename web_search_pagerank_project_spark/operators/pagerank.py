@@ -48,6 +48,18 @@ the plan keeps one state table and one action per iteration:
     via ``salt_partitions`` (SURVEY.md X7) for extreme hubs.
   * Optional durable checkpointing (``checkpointer``) writes per-iteration
     state + lineage metadata for resumability (operators/checkpoint.py).
+
+K personalization vectors (``pagerank_batch``; topic-sensitive PageRank,
+Haveliwala 2002, keeps one ranking per topic, TrustRank one per seed set)
+run through the same loop: the state table carries one ``v_<k>`` and one
+``x_<k>`` column per vector, so each iteration is still ONE edges⋈state
+join and ONE ``groupBy("id")`` with K sums, and the per-iteration action
+returns K residuals and K dangling masses. The edge scan, which dominates
+an iteration, is shared instead of repeated K times; the shuffle carries
+O(V·K) doubles. ``pagerank`` is the K = 1 call, so column k equals a lone
+``pagerank(v=v_k)`` run up to float64 addition order. The ε-stop fires when
+the LARGEST residual is below ε: a fast-converging column runs extra
+rounds and ends closer to its fixed point than its lone run, never less.
 """
 
 from __future__ import annotations
@@ -83,6 +95,23 @@ class PageRankResult:
         return (
             self.ranks.join(graph.vertices, "id")
             .select("url", F.col("rank"))
+        )
+
+
+@dataclass
+class BatchPageRankResult:
+    """ranks: (id: long, rank_<key> double ...) — one column per input key."""
+
+    ranks: DataFrame
+    keys: list[str]
+    iterations: int
+    converged: bool
+    residuals: dict[str, list[float]] = field(default_factory=dict)
+    metrics: list[IterationMetrics] = field(default_factory=list)
+
+    def by_url(self, graph: GraphTables) -> DataFrame:
+        return self.ranks.join(graph.vertices, "id").select(
+            "url", *[f"rank_{k}" for k in self.keys]
         )
 
 
@@ -197,6 +226,84 @@ def pagerank(
        Ignored when THIS run's checkpointer has committed state (resume wins
        — it is the same run's newer iterate, and enters unscaled).
     """
+    x, done, converged, residuals, metrics = _power_method(
+        graph,
+        {"": v},
+        alpha,
+        max_iterations,
+        epsilon,
+        verbose,
+        salt_partitions=salt_partitions,
+        checkpointer=checkpointer,
+        checkpoint_every=checkpoint_every,
+        iters_per_action=iters_per_action,
+        x0=x0,
+    )
+    return PageRankResult(
+        ranks=x.select("id", F.col("x_0").alias("rank")),
+        iterations=done,
+        converged=converged,
+        residuals=residuals[0],
+        metrics=metrics,
+    )
+
+
+def pagerank_batch(
+    graph: GraphTables,
+    vs: dict[str, DataFrame | None],
+    alpha: float = 0.85,
+    max_iterations: int = 1000,
+    epsilon: float = 1e-6,
+    verbose: bool = False,
+) -> BatchPageRankResult:
+    """Run the power method for every personalization vector in ``vs``
+    simultaneously. ``vs`` maps a key (must be a valid column-name suffix)
+    to an (id, v) DataFrame — already L1-normalized, as for pagerank() —
+    or None for the uniform vector. Returns per-key rank columns
+    ``rank_<key>``. Column k after T iterations equals a lone
+    ``pagerank(v=vs[k], max_iterations=T)``; the run stops when every
+    column's residual is below ε.
+    """
+    if not vs:
+        raise ValueError("vs must contain at least one personalization vector")
+    keys = list(vs)
+    for k in keys:
+        if not k.isidentifier():
+            raise ValueError(f"key {k!r} is not a valid column-name suffix")
+    x, done, converged, residuals, metrics = _power_method(
+        graph, vs, alpha, max_iterations, epsilon, verbose
+    )
+    return BatchPageRankResult(
+        ranks=x.select(
+            "id", *[F.col(f"x_{i}").alias(f"rank_{k}") for i, k in enumerate(keys)]
+        ),
+        keys=keys,
+        iterations=done,
+        converged=converged,
+        residuals=dict(zip(keys, residuals)),
+        metrics=metrics,
+    )
+
+
+def _power_method(
+    graph: GraphTables,
+    vs: dict[str, DataFrame | None],
+    alpha: float,
+    max_iterations: int,
+    epsilon: float,
+    verbose: bool,
+    salt_partitions: int | None = None,
+    checkpointer=None,
+    checkpoint_every: int = 10,
+    iters_per_action: int = 1,
+    x0: DataFrame | None = None,
+) -> tuple[DataFrame, int, bool, list[list[float]], list[IterationMetrics]]:
+    """The one power-method loop: column i of the state table is the
+    iterate for the i-th vector of ``vs`` (None: uniform). Returns the final
+    state (id, v_i, dang, x_i, xp_i), the iteration count, whether the
+    largest residual fell below ε, per-column residuals and per-action
+    metrics. ``x0`` and ``checkpointer`` hold one column's state, so only a
+    single vector may use them."""
     spark = graph.edges.sparkSession
     n = graph.n
     if n == 0:
@@ -205,6 +312,11 @@ def pagerank(
         raise ValueError("iters_per_action must be >= 1")
 
     edges = graph.edges  # (src_id, dst_id, weight) persisted, hashed by src_id
+    cols = range(len(vs))
+    names = [
+        f"personalization vector {k!r}" if k else "personalization vector"
+        for k in vs
+    ]
 
     x_in, start_iter, warm = None, 0, False
     if checkpointer is not None:
@@ -225,19 +337,23 @@ def pagerank(
     rows = graph.vertices.select(
         "id",
         F.lit(True).alias("g"),
-        F.lit(1.0 / n if v is None else None).cast("double").alias("v"),
+        *[
+            F.lit(1.0 / n if v is None else None).cast("double").alias(f"v_{i}")
+            for i, v in zip(cols, vs.values())
+        ],
         F.lit(None).cast("boolean").alias("out"),
-        F.lit(None).cast("double").alias("x"),
+        *[F.lit(None).cast("double").alias(f"x_{i}") for i in cols],
     ).unionByName(
         edges.select(F.col("src_id").alias("id"))
         .distinct()
         .withColumn("out", F.lit(True)),
         allowMissingColumns=True,
     )
-    for extra, col in ((v, "v"), (x_in, "x")):
-        if extra is not None:
+    inputs = [(v, "v", f"v_{i}") for i, v in zip(cols, vs.values())]
+    for df, col, name in inputs + [(x_in, "x", "x_0")]:
+        if df is not None:
             rows = rows.unionByName(
-                extra.select("id", F.col(col).cast("double")),
+                df.select("id", F.col(col).cast("double").alias(name)),
                 allowMissingColumns=True,
             )
     pinned = (
@@ -245,43 +361,61 @@ def pagerank(
         .groupBy("id")
         .agg(
             F.max("g").alias("g"),
-            F.sum("v").alias("v"),
+            *[F.sum(f"v_{i}").alias(f"v_{i}") for i in cols],
             F.max("out").alias("out"),
-            F.max("x").alias("x"),
+            *[F.max(f"x_{i}").alias(f"x_{i}") for i in cols],
         )
         .localCheckpoint(eager=False)
     )
 
     in_graph = F.col("g").isNotNull()
-    x_start = F.coalesce(F.col("x"), F.lit(1.0 / math.sqrt(n)))
+    x_start = [F.coalesce(F.col(f"x_{i}"), F.lit(1.0 / math.sqrt(n))) for i in cols]
     row = pinned.agg(
-        F.sum(F.when(in_graph, F.col("v") * F.col("v"))).alias("vv"),
-        F.sum(F.when(in_graph, F.col("v"))).alias("vs"),
-        F.sum(F.when(in_graph, x_start)).alias("m0"),
-        F.sum(F.when(in_graph & F.col("out").isNull(), x_start)).alias("d0"),
-        F.count(F.when(~in_graph & F.col("v").isNotNull(), 1)).alias("outside"),
+        *[
+            agg.alias(f"{name}_{i}")
+            for i in cols
+            for name, agg in (
+                ("vv", F.sum(F.when(in_graph, F.col(f"v_{i}") * F.col(f"v_{i}")))),
+                ("vs", F.sum(F.when(in_graph, F.col(f"v_{i}")))),
+                ("m0", F.sum(F.when(in_graph, x_start[i]))),
+                ("d0", F.sum(F.when(in_graph & F.col("out").isNull(), x_start[i]))),
+                ("outside", F.count(
+                    F.when(~in_graph & F.col(f"v_{i}").isNotNull(), 1)
+                )),
+            )
+        ]
     ).collect()[0]
-    if row["outside"]:
-        raise ValueError(f"personalization vector has {row['outside']} ids "
-                         "outside the graph")
-    norm = math.sqrt(row["vv"] or 0.0)
-    if not norm > 0.0:
-        raise ValueError("personalization vector has zero norm")
-    d0 = row["d0"] or 0.0
-    s = warm_scale(row["m0"], d0, row["vs"] / norm, alpha) if warm else 1.0
-    # dangling mass of the current iterate, carried across iterations so no
-    # separate β job runs inside the loop: each iteration's action returns
-    # the next one
-    dang_mass = s * d0
+    norms, scales, dang_mass = [], [], []
+    for i in cols:
+        if row[f"outside_{i}"]:
+            raise ValueError(f"{names[i]} has {row[f'outside_{i}']} ids "
+                             "outside the graph")
+        norm = math.sqrt(row[f"vv_{i}"] or 0.0)
+        if not norm > 0.0:
+            raise ValueError(f"{names[i]} has zero norm")
+        d0 = row[f"d0_{i}"] or 0.0
+        s = 1.0
+        if warm:
+            s = warm_scale(row[f"m0_{i}"], d0, row[f"vs_{i}"] / norm, alpha)
+        norms.append(norm)
+        scales.append(s)
+        # dangling mass of the current iterate, carried across iterations so
+        # no separate β job runs inside the loop: each iteration's action
+        # returns the next one
+        dang_mass.append(s * d0)
+    vcols = [f"v_{i}" for i in cols]
+    xcols = [f"x_{i}" for i in cols]
     x = pinned.where("g").select(
         "id",
-        F.coalesce(F.col("v"), F.lit(0.0)).alias("v"),
+        *[F.coalesce(F.col(f"v_{i}"), F.lit(0.0)).alias(f"v_{i}") for i in cols],
         F.col("out").isNull().alias("dang"),
-        (x_start * F.lit(s)).alias("x"),
+        *[(x_start[i] * F.lit(scales[i])).alias(f"x_{i}") for i in cols],
     )
 
-    dang_sum = F.coalesce(F.sum(F.when(F.col("dang"), F.col("x"))), F.lit(0.0))
-    residuals: list[float] = []
+    def dang_sum(i):
+        return F.coalesce(F.sum(F.when(F.col("dang"), F.col(f"x_{i}"))), F.lit(0.0))
+
+    residuals: list[list[float]] = [[] for _ in cols]
     metrics: list[IterationMetrics] = []
     converged = False
 
@@ -291,12 +425,12 @@ def pagerank(
         batch = min(iters_per_action, max_iterations - done)
         for sub in range(batch):
             # P^T x: SHUFFLE_HASH on the iterate — edges stay put (hashed by
-            # src_id), the O(V) iterate shuffles + hash-builds per partition
+            # src_id), the O(V·K) iterate shuffles + hash-builds per partition
             # (never broadcast — see module doc)
-            xh = x.select("id", "x").hint("shuffle_hash")
+            xh = x.select("id", *xcols).hint("shuffle_hash")
             contribs = edges.join(xh, edges.src_id == xh.id).select(
                 F.col("dst_id").alias("id"),
-                (F.col("weight") * F.col("x")).alias("wx"),
+                *[(F.col("weight") * F.col(f"x_{i}")).alias(f"wx_{i}") for i in cols],
             )
             if salt_partitions:
                 # salt derived from the *source* side so one hot dst_id fans
@@ -307,56 +441,72 @@ def pagerank(
                         F.pmod(F.spark_partition_id(), F.lit(salt_partitions)),
                     )
                     .groupBy("id", "_salt")
-                    .agg(F.sum("wx").alias("wx"))
+                    .agg(*[F.sum(f"wx_{i}").alias(f"wx_{i}") for i in cols])
                     .drop("_salt")
                 )
             step = (
                 contribs.unionByName(
-                    x.select("id", "v", "dang", "x"), allowMissingColumns=True
+                    x.select("id", *vcols, "dang", *xcols), allowMissingColumns=True
                 )
                 .groupBy("id")
                 .agg(
-                    F.sum("wx").alias("c"),
-                    F.max("v").alias("v"),
+                    *[F.sum(f"wx_{i}").alias(f"c_{i}") for i in cols],
+                    *[F.max(f"v_{i}").alias(f"v_{i}") for i in cols],
                     F.max("dang").alias("dang"),
-                    F.max("x").alias("xp"),
+                    *[F.max(f"x_{i}").alias(f"xp_{i}") for i in cols],
                 )
             )
             if sub == 0:
                 # β from the dangling mass the previous action computed
-                beta_col = F.lit(alpha * dang_mass + (1.0 - alpha))
+                betas = [F.lit(alpha * dm + (1.0 - alpha)) for dm in dang_mass]
             else:
                 # inner steps of a fused batch: β stays JVM-side — 1-row
                 # dangling-mass aggregate broadcast-crossed into the iterate
-                step = step.crossJoin(F.broadcast(x.agg(dang_sum.alias("_dm"))))
-                beta_col = F.lit(alpha) * F.col("_dm") + F.lit(1.0 - alpha)
+                step = step.crossJoin(
+                    F.broadcast(x.agg(*[dang_sum(i).alias(f"_dm_{i}") for i in cols]))
+                )
+                betas = [
+                    F.lit(alpha) * F.col(f"_dm_{i}") + F.lit(1.0 - alpha) for i in cols
+                ]
             x = step.select(
                 "id",
-                "v",
+                *vcols,
                 "dang",
-                (
-                    beta_col * (F.col("v") / F.lit(norm))
-                    + F.lit(alpha) * F.coalesce(F.col("c"), F.lit(0.0))
-                ).alias("x"),
-                "xp",
+                *[
+                    (
+                        betas[i] * (F.col(f"v_{i}") / F.lit(norms[i]))
+                        + F.lit(alpha) * F.coalesce(F.col(f"c_{i}"), F.lit(0.0))
+                    ).alias(f"x_{i}")
+                    for i in cols
+                ],
+                *[f"xp_{i}" for i in cols],
             ).localCheckpoint(eager=False)
             # lazy on purpose: fused batches do not recompute the iterate, and
             # eager intermediate jobs would only serialize the batch
 
-        # the one action per batch: residual (between the batch's last two
-        # iterates — reference stop semantics at batch granularity) + the
-        # next batch's dangling mass; materializes every fused checkpoint
+        # the one action per batch: per-column residual (between the batch's
+        # last two iterates — reference stop semantics at batch granularity)
+        # + the next batch's dangling masses; materializes every fused
+        # checkpoint
         row = x.agg(
-            F.sqrt(
-                F.sum((F.col("x") - F.col("xp")) * (F.col("x") - F.col("xp")))
-            ).alias("r"),
-            dang_sum.alias("dm"),
+            *[
+                F.sqrt(
+                    F.sum(
+                        (F.col(f"x_{i}") - F.col(f"xp_{i}"))
+                        * (F.col(f"x_{i}") - F.col(f"xp_{i}"))
+                    )
+                ).alias(f"r_{i}")
+                for i in cols
+            ],
+            *[dang_sum(i).alias(f"dm_{i}") for i in cols],
         ).collect()[0]
-        residual, dang_mass = float(row["r"]), float(row["dm"])
+        for i in cols:
+            residuals[i].append(float(row[f"r_{i}"]))
+        dang_mass = [float(row[f"dm_{i}"]) for i in cols]
+        residual = max(r[-1] for r in residuals)
         done += batch
 
         wall_ms = (time.monotonic() - t0) * 1000.0
-        residuals.append(residual)
         metrics.append(IterationMetrics(done - 1, residual, wall_ms / batch))
         if verbose:
             print(f"i={done - 1} residual={residual}")
@@ -365,7 +515,7 @@ def pagerank(
             done % checkpoint_every == 0 or residual < epsilon
         ):
             checkpointer.write(
-                x.select("id", F.col("x").alias("rank")),
+                x.select("id", F.col("x_0").alias("rank")),
                 iteration=done,
                 meta={"residual": residual, "alpha": alpha, "wall_ms": wall_ms},
             )
@@ -373,10 +523,4 @@ def pagerank(
         if residual < epsilon:
             converged = True
 
-    return PageRankResult(
-        ranks=x.select("id", F.col("x").alias("rank")),
-        iterations=done,
-        converged=converged,
-        residuals=residuals,
-        metrics=metrics,
-    )
+    return x, done, converged, residuals, metrics

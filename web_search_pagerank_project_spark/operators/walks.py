@@ -17,9 +17,12 @@ exactly replayable by the SQL oracle:
     same ascending order, so interval bounds are bit-identical float64);
     the last interval's hi is forced to 2.0 so a Σweights = 1−ulp rounding
     artifact can never drop a walk;
-  * the per-(walk, step) uniform draw is a pure-integer LCG over
-    (walk_id, step) — overflow-free in int64, writable verbatim in ANSI
-    SQL (same technique as operators/anf.py's hash);
+  * each walk carries its own pure-integer LCG state as a column of the
+    step state: seeded from walk_id, advanced once per step, and the step's
+    uniform draw is state / M — overflow-free in int64 (products stay below
+    2^62) and writable verbatim as a recursive SQL CTE. Consecutive draws of
+    one walk are successive LCG outputs, not an arithmetic progression in
+    step;
   * one step = state ⋈ cum-edges equi-join on the current vertex + an
     interval filter — map-side fan-out is the out-degree, the shuffle
     carries one (walk_id, vertex) row per LIVE walk per step (walks at
@@ -40,23 +43,15 @@ from pyspark.sql import functions as F
 from .graph_build import GraphTables
 from .lineage import cut_lineage
 
-__all__ = ["random_walks", "walk_rand", "skipgram_pairs"]
+__all__ = ["random_walks", "skipgram_pairs"]
 
 _LCG_A, _LCG_C, _LCG_M = 1103515245, 12345, 1 << 31
-_STEP_MIX = 2654435761  # Knuth multiplicative-hash constant
 
 
-def walk_rand(walk_id_col, step: int):
-    """Uniform [0, 1) draw for (walk_id, step): pure-integer LCG, exactly
-    replayable in ANSI SQL. Overflow-free in int64 for walk_id < ~8.3e9;
-    larger walk universes should pre-fold walk_id with pmod(_LCG_M)."""
-    h = F.pmod(
-        F.pmod(walk_id_col, F.lit(_LCG_M)) * _LCG_A
-        + _LCG_C
-        + F.lit(step) * _STEP_MIX,
-        F.lit(_LCG_M),
-    )
-    return h.cast("double") / F.lit(float(_LCG_M))
+def _lcg_next(state_col):
+    """One LCG step (state·A + C) mod M on a state in [0, M): the product
+    stays below 2^62, so int64 never overflows."""
+    return F.pmod(state_col * _LCG_A + _LCG_C, F.lit(_LCG_M))
 
 
 def random_walks(
@@ -119,19 +114,25 @@ def random_walks(
             (F.col("id") * walks_per_vertex + F.col("_j")).alias("walk_id"),
             "id",
         )
-    state = cut_lineage(st, eager=True)
+    # s: the walk's LCG state, seeded from walk_id; each step advances it
+    # once and draws s / M
+    state = cut_lineage(
+        st.withColumn("s", _lcg_next(F.pmod(F.col("walk_id"), F.lit(_LCG_M)))),
+        eager=True,
+    )
     parts = [state.select("walk_id", F.lit(0).alias("step"), "id")]
 
     for step in range(1, walk_length + 1):
-        r = walk_rand(F.col("walk_id"), step)
+        r = F.col("s").cast("double") / F.lit(float(_LCG_M))
         nxt = (
             cum.join(
                 state.withColumnRenamed("id", "src_id").hint("shuffle_hash"),
                 "src_id",
             )
+            .withColumn("s", _lcg_next(F.col("s")))
             .withColumn("_r", r)
             .filter((F.col("lo") <= F.col("_r")) & (F.col("_r") < F.col("hi")))
-            .select("walk_id", F.col("dst_id").alias("id"))
+            .select("walk_id", F.col("dst_id").alias("id"), "s")
         )
         state = cut_lineage(nxt, eager=True)
         if state.isEmpty():
