@@ -125,10 +125,17 @@ _WALKS_ORACLE_CTE = f"""
                    END AS hi
             FROM wpe
         ),
+        -- walks.py::_walk_seed: xor-shift/multiply rounds over id mod 2^31
+        wseed1 AS (
+            SELECT id, (xor(h, h >> 15) * 739982445) % 2147483648 AS h
+            FROM (SELECT id, id % 2147483648 AS h FROM iu)
+        ),
+        wseed2 AS (
+            SELECT id, (xor(h, h >> 12) * 695872825) % 2147483648 AS h
+            FROM wseed1
+        ),
         wk(walk_id, step, id, s) AS (
-            SELECT id, 0, id, ((id % 2147483648) * 1103515245 + 12345)
-                              % 2147483648
-            FROM iu
+            SELECT id, 0, id, xor(h, h >> 15) FROM wseed2
             UNION ALL
             SELECT w.walk_id, w.step + 1, c.dst_id,
                    (w.s * 1103515245 + 12345) % 2147483648

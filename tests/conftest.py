@@ -25,7 +25,8 @@ SMALL_EDGES = [
 @pytest.fixture(scope="session")
 def spark():
     # few shuffle partitions: tiny fixtures, many iterations — task-launch
-    # overhead dominates otherwise. Scale configs are exercised in bench.
+    # overhead dominates otherwise. Scale configs (the default get_spark()
+    # session) are exercised by perfbench.
     s = get_spark(
         app_name="wspr-tests",
         master="local[4]",

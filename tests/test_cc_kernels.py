@@ -1,6 +1,6 @@
-"""CC kernel parity: star and CSR kernels vs the DataFrame min-label kernel.
+"""CC kernel parity: the star kernel vs the DataFrame min-label kernel.
 
-All three implement the same contract — component(v) = min dense id in v's
+Both implement the same contract — component(v) = min dense id in v's
 weakly-connected component — so on any graph their outputs must be
 IDENTICAL label-for-label (not just same partition).
 """
@@ -10,11 +10,11 @@ import random
 import pytest
 
 from conftest import SMALL_EDGES
+from oracle import connected_components_oracle
 
 from web_search_pagerank_project_spark import (
     build_graph,
     connected_components,
-    connected_components_csr,
     connected_components_star,
 )
 
@@ -36,11 +36,10 @@ def _build(spark, rows):
 
 
 @pytest.mark.parametrize("rows", [SMALL_EDGES, MULTI_CC])
-def test_star_and_csr_match_dataframe_kernel(spark, rows):
+def test_star_matches_dataframe_kernel(spark, rows):
     graph = _build(spark, rows)
     base = _labels(connected_components(graph))
     assert _labels(connected_components_star(graph)) == base
-    assert _labels(connected_components_csr(graph, num_blocks=3)) == base
     graph.unpersist()
 
 
@@ -53,16 +52,9 @@ def test_kernels_match_on_random_graph(spark):
     graph = _build(spark, rows)
     base = _labels(connected_components(graph))
     assert _labels(connected_components_star(graph)) == base
-    assert _labels(connected_components_csr(graph, num_blocks=8)) == base
-    # batched rounds: same fixed point regardless of action granularity
-    assert _labels(
-        connected_components_csr(graph, num_blocks=8, rounds_per_action=4)
-    ) == base
-    # dense rounds (frontier masking off — the scaling protocol's
-    # fixed-work mode) reach the identical fixed point
-    assert _labels(
-        connected_components_csr(graph, num_blocks=8, frontier=False)
-    ) == base
+    url_of = {r["id"]: r["url"] for r in graph.vertices.collect()}
+    got = {url_of[v]: url_of[c] for v, c in base.items()}
+    assert got == connected_components_oracle(rows)
     graph.unpersist()
 
 
@@ -79,53 +71,10 @@ def test_star_converges_logarithmically_on_long_path(spark):
     graph.unpersist()
 
 
-def test_csr_cc_convergence_cap_raises(spark):
-    graph = _build(spark, [("a", "b"), ("b", "c"), ("c", "d")])
-    with pytest.raises(RuntimeError):
-        connected_components_csr(graph, max_rounds=1, num_blocks=2)
-    graph.unpersist()
-
-
-def test_balanced_block_keys_match_spark_hash(spark):
-    """operators/blockmap.py replicates Spark's Murmur3_x86_32.hashInt
-    (the expression behind F.hash and HashPartitioning): pin the Python
-    implementation against the JVM for a spread of ints, and check the
-    balanced keys actually fill partition quotas exactly."""
-    import math
-
-    from pyspark.sql import functions as F
-
-    from web_search_pagerank_project_spark.operators.blockmap import (
-        _partition_of,
-        balanced_block_keys,
-        spark_murmur3_int,
-    )
-
-    vals = list(range(64)) + [997, 65536, 2**31 - 1]
-    rows = (
-        spark.createDataFrame([(v,) for v in vals], "x int")
-        .select("x", F.hash("x").alias("h"))
-        .collect()
-    )
-    for r in rows:
-        expect = r["h"] & 0xFFFFFFFF
-        assert spark_murmur3_int(r["x"]) == expect, r["x"]
-
-    for k, p in [(16, 16), (80, 16), (20, 4), (512, 16)]:
-        keys = balanced_block_keys(k, p)
-        assert len(set(keys)) == k
-        loads = {}
-        for key in keys:
-            pid = _partition_of(key, p)
-            loads[pid] = loads.get(pid, 0) + 1
-        assert max(loads.values()) == math.ceil(k / p)
-
-
-def test_cc_csr_edgeless_blocks_not_merged(spark):
-    """ADVICE r3: residue classes with no (symmetrized) edges used to be
-    absent from the minlabel blocks table, aliasing their state rows onto
-    the -1 bkey sentinel. Isolated vertices must come back as their own
-    singleton components."""
+def test_cc_isolated_vertices_are_singletons(spark):
+    """Vertices with no edges (here ids 2, 3, 6 and 7) have no rows in the
+    symmetrized edge table; they must still come back, each as its own
+    singleton component."""
     from web_search_pagerank_project_spark.operators.graph_build import GraphTables
 
     vertices = spark.createDataFrame(
@@ -136,35 +85,7 @@ def test_cc_csr_edgeless_blocks_not_merged(spark):
         "src_id long, dst_id long, weight double",
     )
     graph = GraphTables(vertices, edges, 8)
-    # blocks 2 and 3 (ids {2, 6} and {3, 7}) have no edges at num_blocks=4
-    got = _labels(connected_components_csr(graph, num_blocks=4))
-    want = _labels(connected_components(graph))
+    got = _labels(connected_components(graph))
     assert set(got) == set(range(8))
-    assert got == want
     assert got[2] == 2 and got[3] == 3 and got[6] == 6 and got[7] == 7
-
-
-def test_csr_cc_chunked_blocks_match(spark):
-    """Chunked block rows (bounded Arrow cells, round-4 slow-mode fix) are
-    layout-invariant: chunk_edges small enough to split destination runs
-    across chunks must reproduce the unchunked labels exactly."""
-    import random as _random
-
-    from web_search_pagerank_project_spark.operators.components import (
-        build_minlabel_blocks,
-    )
-
-    rng = _random.Random(99)
-    rows = [
-        (f"u{rng.randrange(40):02d}", f"u{rng.randrange(40):02d}")
-        for _ in range(120)
-    ]
-    graph = _build(spark, rows)
-    base = _labels(connected_components(graph))
-    for ce in (1, 3, 7):  # pathological chunk sizes force run splits
-        blocks = build_minlabel_blocks(graph, 5, chunk_edges=ce)
-        got = _labels(
-            connected_components_csr(graph, blocks=blocks, rounds_per_action=3)
-        )
-        assert got == base, ce
-    graph.unpersist()
+    assert got[0] == got[1] == got[4] == got[5] == 0

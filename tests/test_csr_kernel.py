@@ -145,3 +145,38 @@ def test_csr_all_dangling_blocks_not_merged(spark):
     for i in a:
         assert np.isclose(a[i], b[i], atol=1e-12), i
     graph.unpersist()
+
+
+def test_balanced_block_keys_match_spark_hash(spark):
+    """operators/blockmap.py replicates Spark's Murmur3_x86_32.hashInt
+    (the expression behind F.hash and HashPartitioning): pin the Python
+    implementation against the JVM for a spread of ints, and check the
+    balanced keys actually fill partition quotas exactly."""
+    import math
+
+    from pyspark.sql import functions as F
+
+    from web_search_pagerank_project_spark.operators.blockmap import (
+        _partition_of,
+        balanced_block_keys,
+        spark_murmur3_int,
+    )
+
+    vals = list(range(64)) + [997, 65536, 2**31 - 1]
+    rows = (
+        spark.createDataFrame([(v,) for v in vals], "x int")
+        .select("x", F.hash("x").alias("h"))
+        .collect()
+    )
+    for r in rows:
+        expect = r["h"] & 0xFFFFFFFF
+        assert spark_murmur3_int(r["x"]) == expect, r["x"]
+
+    for k, p in [(16, 16), (80, 16), (20, 4), (512, 16)]:
+        keys = balanced_block_keys(k, p)
+        assert len(set(keys)) == k
+        loads = {}
+        for key in keys:
+            pid = _partition_of(key, p)
+            loads[pid] = loads.get(pid, 0) + 1
+        assert max(loads.values()) == math.ceil(k / p)

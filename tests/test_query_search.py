@@ -360,17 +360,31 @@ def test_cli_synonyms_glove_slice_transcript(spark, tmp_path, caplog):
             ("covid-lab", "virus-wire"),
         ]:
             f.write(f"{s},{t}\n")
-    with caplog.at_level(logging.INFO, logger="wspr.engine"):
-        cli_main(
-            [
-                "--data", data,
-                "--search_query", "corona",
-                "--synonyms_file", fixture,
-                "--max_iterations", "100",
-                "--master", "local[4]",
-                "--partitions", "4",
-            ]
-        )
+    # cli_main's get_spark() re-applies the default SQL conf (AQE on) to
+    # the shared test session; put the suite's values back afterwards
+    sql_conf = {r["key"]: r["value"] for r in spark.sql("SET").collect()}
+    try:
+        with caplog.at_level(logging.INFO, logger="wspr.engine"):
+            cli_main(
+                [
+                    "--data", data,
+                    "--search_query", "corona",
+                    "--synonyms_file", fixture,
+                    "--max_iterations", "100",
+                    "--master", "local[4]",
+                    "--partitions", "4",
+                ]
+            )
+    finally:
+        for r in spark.sql("SET").collect():
+            key, value = r["key"], r["value"]
+            if sql_conf.get(key) == value or not spark.conf.isModifiable(key):
+                continue
+            if key in sql_conf:
+                spark.conf.set(key, sql_conf[key])
+            else:
+                spark.conf.unset(key)
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
     lines = [msg for msg in caplog.messages if msg.startswith("rank=")]
     assert len(lines) == 3
     shape = re.compile(r"^rank=\d+ pagerank=\d\.\d{4}e[+-]\d{2} url=(\S+)$")

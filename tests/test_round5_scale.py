@@ -210,9 +210,17 @@ from web_search_pagerank_project_spark.operators.walks import random_walks
 _WLCG_A, _WLCG_C, _WLCG_M = 1103515245, 12345, 1 << 31
 
 
+def _walk_seed(wid):
+    h = wid % _WLCG_M
+    for shift, mult in ((15, 739982445), (12, 695872825)):
+        h = ((h ^ (h >> shift)) * mult) % _WLCG_M
+    return h ^ (h >> 15)
+
+
 def _walk_oracle(graph_edges, ids_by_url, walk_length, walks_per_vertex):
     """Pure-python replay: cumulative intervals in dst order (last hi=2.0),
-    one LCG state per walk, seeded from walk_id and advanced per step."""
+    one LCG state per walk, seeded by a mix of walk_id and advanced per
+    step."""
     from collections import defaultdict
 
     outs = defaultdict(list)  # src_id -> [(dst_id, weight)] in dst order
@@ -233,7 +241,7 @@ def _walk_oracle(graph_edges, ids_by_url, walk_length, walks_per_vertex):
             wid = v * walks_per_vertex + j
             rows.add((wid, 0, v))
             cur = v
-            s = ((wid % _WLCG_M) * _WLCG_A + _WLCG_C) % _WLCG_M
+            s = _walk_seed(wid)
             for step in range(1, walk_length + 1):
                 if cur not in cum:
                     break
@@ -284,6 +292,31 @@ def test_random_walks_draws_are_not_an_arithmetic_progression(spark):
         diffs = {(w[t + 1] - w[t]) % d for t in range(1, 8)}
         assert len(diffs) > 2, (wid, [w[t] for t in range(9)])
     graph.unpersist()
+
+
+def test_random_walks_states_not_offset_across_walks(spark):
+    """At a fixed step, the LCG states of walks w and w+1 must not differ by
+    one constant for every w: an affine seed gives (s(w+1) - s(w)) mod M =
+    A^(t+1) for all w, correlating every walk's draws with its neighbour's."""
+    from pyspark.sql import functions as F
+
+    from web_search_pagerank_project_spark.operators import walks
+
+    s = walks._walk_seed(F.col("id"))
+    for _ in range(3):
+        s = walks._lcg_next(s)
+    rows = spark.range(2000).select("id", s.alias("s")).orderBy("id").collect()
+    states = [r["s"] for r in rows]
+    # the pure-python replay in _walk_oracle agrees with the engine's mix
+    replay = []
+    for w in range(2000):
+        x = _walk_seed(w)
+        for _ in range(3):
+            x = (x * _WLCG_A + _WLCG_C) % _WLCG_M
+        replay.append(x)
+    assert states == replay
+    diffs = {(b - a) % _WLCG_M for a, b in zip(states, states[1:])}
+    assert len(diffs) > 1000, len(diffs)
 
 
 def test_random_walks_terminate_at_dangling(spark):

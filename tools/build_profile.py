@@ -1,9 +1,10 @@
 #!/usr/bin/env python3
-"""Decompose graph_build_core wall time at bench scale (VERDICT r3 #4).
+"""Decompose build_graph wall time stage by stage (VERDICT r3 #4).
 
-Times each internal stage of build_graph separately on the same
-localCheckpointed synth edges bench.py uses, min-of-N warm, so the 10.3 s
-sf0.1 headline can be attributed to a stage instead of guessed at.
+Times each internal stage of build_graph separately on localCheckpointed
+synth_edges (zipf 1.5, seed 42; 2M edges over 100k vertices by default),
+min-of-N warm, so build time can be attributed to a stage instead of
+guessed at.
 
 Usage: python tools/build_profile.py [n_edges] [n_verts] [repeats]
 """
@@ -53,7 +54,7 @@ def main():
         print(f"{name:28s} {best:7.3f}s")
         return out
 
-    # whole-operator reference number (same as bench graph_build_core)
+    # whole-operator reference number
     timed("build_graph (end-to-end)", lambda: _full(build_graph, raw))
 
     # stage decomposition -------------------------------------------------

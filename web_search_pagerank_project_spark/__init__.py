@@ -23,11 +23,7 @@ from .operators.pagerank import (
     BatchPageRankResult,
 )
 from .operators.csr_kernel import pagerank_csr, build_csr_blocks
-from .operators.components import (
-    connected_components,
-    connected_components_csr,
-    connected_components_star,
-)
+from .operators.components import connected_components, connected_components_star
 from .operators.hits import hits, HitsResult
 from .operators.kcore import k_core
 from .operators.scc import strongly_connected_components, bowtie_classes, SccResult
@@ -68,7 +64,6 @@ __all__ = [
     "build_csr_blocks",
     "PageRankResult",
     "connected_components",
-    "connected_components_csr",
     "connected_components_star",
     "hits",
     "HitsResult",

@@ -1,8 +1,8 @@
-"""Balanced block->partition placement for the block kernels.
+"""Balanced block->partition placement for the CSR PageRank kernel.
 
 Spark's cogroup stages hash-partition their grouping key with Murmur3
-(seed 42) and ``pmod`` over the shuffle partition count. For the block
-kernels the grouping key is a block id 0..K-1, and Murmur3 over a small
+(seed 42) and ``pmod`` over the shuffle partition count. For the CSR
+kernel the grouping key is a block id 0..K-1, and Murmur3 over a small
 set of consecutive ints is persistently clumpy: measured placements
 include 16 blocks using only 10 of 16 partitions (max load 2) and 80
 blocks over 16 partitions with max load 8 against an ideal 5 — i.e.
@@ -11,7 +11,7 @@ requires while cores sit idle, at ANY scale (a real cluster reducing K
 blocks over P reducers has the same birthday problem).
 
 No block COUNT fixes this (scans of K in [16, 128] found none whose
-contiguous ids spread evenly), so the kernels group on a remapped key
+contiguous ids spread evenly), so the kernel groups on a remapped key
 instead: ``balanced_block_keys(k, p)`` returns k distinct ints chosen so
 their Spark-hash partitions fill per-partition quotas exactly
 (floor/ceil(k/p) blocks per partition). The true block number stays in
@@ -20,7 +20,7 @@ the ``block`` column for id arithmetic; only the shuffle key changes.
 ``spark_murmur3_int`` replicates org.apache.spark.unsafe.hash
 .Murmur3_x86_32.hashInt(x, 42), the expression behind
 ``F.hash(int32col)`` and HashPartitioning — pinned against F.hash in
-tests/test_cc_kernels.py.
+tests/test_csr_kernel.py.
 """
 
 from __future__ import annotations

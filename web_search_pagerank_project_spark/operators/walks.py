@@ -18,11 +18,12 @@ exactly replayable by the SQL oracle:
     the last interval's hi is forced to 2.0 so a Σweights = 1−ulp rounding
     artifact can never drop a walk;
   * each walk carries its own pure-integer LCG state as a column of the
-    step state: seeded from walk_id, advanced once per step, and the step's
-    uniform draw is state / M — overflow-free in int64 (products stay below
-    2^62) and writable verbatim as a recursive SQL CTE. Consecutive draws of
-    one walk are successive LCG outputs, not an arithmetic progression in
-    step;
+    step state: seeded by a non-affine 31-bit mix of walk_id (xor-shift /
+    multiply rounds, so neighbouring walks do not draw at a constant
+    offset), advanced once per step, and the step's uniform draw is
+    state / M — overflow-free in int64 (products stay below 2^62) and
+    writable verbatim as a recursive SQL CTE. Consecutive draws of one walk
+    are successive LCG outputs, not an arithmetic progression in step;
   * one step = state ⋈ cum-edges equi-join on the current vertex + an
     interval filter — map-side fan-out is the out-degree, the shuffle
     carries one (walk_id, vertex) row per LIVE walk per step (walks at
@@ -52,6 +53,21 @@ def _lcg_next(state_col):
     """One LCG step (state·A + C) mod M on a state in [0, M): the product
     stays below 2^62, so int64 never overflows."""
     return F.pmod(state_col * _LCG_A + _LCG_C, F.lit(_LCG_M))
+
+
+# (shift, multiplier) rounds of the seed mix; odd multipliers below 2^31
+# keep each round a bijection on [0, M) with products below 2^62
+_MIX_ROUNDS = ((15, 739982445), (12, 695872825))
+
+
+def _walk_seed(walk_id_col):
+    """A walk's initial LCG state: walk_id mod M through xor-shift/multiply
+    rounds and a final xor-shift. An affine seed would make walks w and
+    w+1 differ by the same constant at every step for every w."""
+    h = F.pmod(walk_id_col, F.lit(_LCG_M))
+    for shift, mult in _MIX_ROUNDS:
+        h = F.pmod(h.bitwiseXOR(F.shiftright(h, shift)) * mult, F.lit(_LCG_M))
+    return h.bitwiseXOR(F.shiftright(h, 15))
 
 
 def random_walks(
@@ -116,10 +132,7 @@ def random_walks(
         )
     # s: the walk's LCG state, seeded from walk_id; each step advances it
     # once and draws s / M
-    state = cut_lineage(
-        st.withColumn("s", _lcg_next(F.pmod(F.col("walk_id"), F.lit(_LCG_M)))),
-        eager=True,
-    )
+    state = cut_lineage(st.withColumn("s", _walk_seed(F.col("walk_id"))), eager=True)
     parts = [state.select("walk_id", F.lit(0).alias("step"), "id")]
 
     for step in range(1, walk_length + 1):

@@ -28,7 +28,7 @@ def get_spark(
     """Build (or fetch) a SparkSession with engine defaults.
 
     master defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default all cores)
-    so the same entry points serve tests, bench, and spark-submit (where
+    so the same entry points serve tests, perfbench, and spark-submit (where
     master is supplied externally and this value is ignored).
     """
     if master is None:

@@ -1,7 +1,7 @@
 """Deterministic synthetic data generators (FIXTURES.md; no external data).
 
 * ``synth_edges``        — seeded power-law (Zipf) directed url graph; used by
-                           the bench harness and skew tests.
+                           perfbench and skew tests.
 * ``synth_pages``        — Common-Crawl-style pages table per BASELINE.json
                            input_hint (url, warc_ts, html binary, text, lang):
                            renders each page's HTML from its outlink list with
