@@ -1,6 +1,7 @@
 """Checkpoint/resume (X8): resumed run must be bit-identical to uninterrupted."""
 
 import os
+import shutil
 
 import numpy as np
 
@@ -59,4 +60,23 @@ def test_torn_write_ignored(spark, tmp_path):
     with open(os.path.join(torn, "part-00000.parquet"), "wb") as f:
         f.write(b"garbage")
     assert ckpt._latest_committed() == 5
+    graph.unpersist()
+
+
+def test_state_without_lineage_record_ignored(spark, tmp_path):
+    """write() commits the parquet (_SUCCESS) before its meta record; a
+    failure in between must not leave a state that resume returns."""
+    df = spark.createDataFrame(SMALL_EDGES, "src string, dst string")
+    graph = build_graph(df, cache=True)
+    ck_dir = str(tmp_path / "ck4")
+    ckpt = IterationCheckpointer(ck_dir)
+    pagerank(graph, max_iterations=5, checkpoint_every=5, checkpointer=ckpt)
+    # a complete iter=10 parquet state (with _SUCCESS) but no meta/iter=10.json
+    shutil.copytree(
+        os.path.join(ck_dir, "state", "iter=5"), os.path.join(ck_dir, "state", "iter=10")
+    )
+    assert os.path.exists(os.path.join(ck_dir, "state", "iter=10", "_SUCCESS"))
+    _, it = ckpt.resume(spark)
+    assert it == 5
+    assert [r["iteration"] for r in ckpt.lineage()] == [5]
     graph.unpersist()

@@ -208,32 +208,10 @@ def test_warm_start_from_checkpoint_on_updated_graph(spark, tmp_path):
     cold = pagerank(g1, epsilon=1e-10, max_iterations=500)
     assert warm.converged
     assert warm.iterations < cold.iterations
+    # it genuinely warm-started: the first step moves far less than cold's
+    assert warm.residuals[0] < 0.6 * cold.residuals[0]
     rc, rw = _ranks(cold), _ranks(warm)
     assert max(abs(rc[i] - rw[i]) for i in rc) < 1e-9
-    for g in (g0, g1):
-        g.unpersist()
-
-
-def test_warm_start_kernel_parity_csr_vs_dataframe(spark):
-    """Both kernels share mass_matched_x0, so their warm starts must be
-    numerically identical: same iteration counts and final scores at 1e-12
-    (the kernels' cold-start parity bar, test_csr_kernel)."""
-    from web_search_pagerank_project_spark import pagerank_csr
-
-    g0 = build(spark, BASE, keep_mult=True)
-    prev = pagerank(g0, epsilon=1e-10, max_iterations=500)
-    g1 = update_graph(g0, spark.createDataFrame(DELTA, "src string, dst string"))
-
-    warm_df = pagerank(g1, epsilon=1e-10, max_iterations=500, x0=prev.ranks)
-    warm_csr = pagerank_csr(g1, epsilon=1e-10, max_iterations=500, x0=prev.ranks)
-    assert warm_df.converged and warm_csr.converged
-    assert warm_csr.iterations == warm_df.iterations
-    ra, rb = _ranks(warm_df), _ranks(warm_csr)
-    assert ra.keys() == rb.keys()
-    assert max(abs(ra[i] - rb[i]) for i in ra) < 1e-12
-    # and it genuinely warm-started (sanity vs the cold CSR run)
-    cold_csr = pagerank_csr(g1, epsilon=1e-10, max_iterations=500)
-    assert warm_csr.residuals[0] < 0.6 * cold_csr.residuals[0]
     for g in (g0, g1):
         g.unpersist()
 

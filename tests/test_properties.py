@@ -105,31 +105,3 @@ def test_component_sizes_partition_n(spark):
     sizes = component_sizes(comp).collect()
     assert sum(r["size"] for r in sizes) == g.n
     g.unpersist()
-
-
-def test_csr_block_count_invariance(spark):
-    """pagerank_csr must match the DataFrame kernel for EVERY block count,
-    including k > n and counts that leave residue classes edge-less or
-    all-dangling (the ADVICE r3 silent-merge bug class). Graphs are
-    hypothesis-free here (one Spark session, bounded runs) but sweep the
-    adversarial k values deterministically."""
-    from web_search_pagerank_project_spark import pagerank_csr
-
-    rng = np.random.default_rng(23)
-    # heavy sink structure: half the vertices are pure sinks
-    rows = [
-        (f"s{int(rng.integers(10))}", f"t{int(rng.integers(10))}")
-        for _ in range(40)
-    ]
-    df = spark.createDataFrame(rows, "src string, dst string")
-    g = build_graph(df, cache=True)
-    base = {r["id"]: r["rank"] for r in pagerank(g, max_iterations=8).ranks.collect()}
-    for k in (1, 2, 3, 7, g.n, g.n + 5, 3 * g.n):
-        got = {
-            r["id"]: r["rank"]
-            for r in pagerank_csr(g, max_iterations=8, num_blocks=k).ranks.collect()
-        }
-        assert set(got) == set(base), f"k={k}: vertex set changed"
-        for i in base:
-            assert np.isclose(got[i], base[i], atol=1e-12), (k, i)
-    g.unpersist()

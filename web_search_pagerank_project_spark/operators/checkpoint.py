@@ -11,8 +11,9 @@ onto an Iceberg table partitioned by ``iter``):
          num_partitions, partition_rows: {pid: rows}, committed_at_iter}
 
 Resume picks the max K whose _SUCCESS exists and whose meta record parses;
-a torn write (no _SUCCESS) is ignored, so kill-at-any-point restarts cleanly
-from the last committed iteration (tested in tests/test_checkpoint_resume.py).
+a torn write (no _SUCCESS, or no parsable meta record) is ignored, so
+kill-at-any-point restarts cleanly from the last committed iteration
+(tested in tests/test_checkpoint_resume.py).
 """
 
 from __future__ import annotations
@@ -70,10 +71,22 @@ class IterationCheckpointer:
             k = int(name.split("=", 1)[1])
             if exclude is not None and k == exclude:
                 continue
-            if os.path.exists(os.path.join(state_root, name, "_SUCCESS")):
-                if best is None or k > best:
-                    best = k
+            if (best is None or k > best) and self._committed(k):
+                best = k
         return best
+
+    def _committed(self, iteration: int) -> bool:
+        """The parquet commit marker AND the lineage record: ``write`` lands
+        the record last, so a failure in between leaves state no one may
+        resume from or name as a parent."""
+        if not os.path.exists(os.path.join(self._state_dir(iteration), "_SUCCESS")):
+            return False
+        try:
+            with open(self._meta_path(iteration)) as f:
+                json.load(f)
+        except (OSError, ValueError):
+            return False
+        return True
 
     def resume(self, spark: SparkSession) -> tuple[DataFrame, int] | None:
         """Return (state_df_with_column_x, iteration) of the latest committed

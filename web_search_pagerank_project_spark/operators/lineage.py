@@ -20,10 +20,13 @@ The DataFrame loops stay safe empirically, not by clamping: their measured
 inherited sizeInBytes bit-length grows LINEARLY (~9 bits per round on
 pyspark 4.1.2) — the round plan multiplies the state estimate by bounded
 per-round factors instead of by a second copy of itself — so the BigInt
-work stays negligible at any practical round count. The CSR-block kernel's
-state plan (join -> cogroup pandas) references the previous state through
-BOTH cogroup children, which is what makes its estimate square (bit-length
-DOUBLE) per iteration, so it must reset stats.
+work stays negligible at any practical round count. A loop whose round
+plan joins the previous state with ITSELF (or with a value derived from it)
+multiplies the estimate by a second copy of itself, so the bit-length
+DOUBLES per round and the loop must reset stats: MS-BFS (fresh = arrived x
+seen, then seen' = seen x fresh), HyperBall (regs x nbr(regs)) and SCC's
+trim (deg read three times per level). The CC, k-core and walk loops call
+it as well.
 
 ``cut_lineage`` does localCheckpoint, then rebuilds the DataFrame directly
 from the checkpointed InternalRow RDD — dropping originStats/constraints so

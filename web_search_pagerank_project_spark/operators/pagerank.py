@@ -131,58 +131,13 @@ def warm_scale(m0: float, d0: float, mv: float, alpha: float) -> float:
     mass; estimating δ* ≈ s·δ0 and solving for s gives
     s = mv / (m0 − alpha·δ0·(mv−1)/(1−alpha)).
 
-    Both kernels call it (pagerank's prologue, pagerank_csr through
-    :func:`mass_matched_x0`), so their warm paths are numerically identical.
+    The prologue of :func:`_power_method` calls it with the m0/d0 it
+    aggregates from the state table.
     """
     denom = m0 - alpha * d0 * (mv - 1.0) / (1.0 - alpha)
     if denom > 0 and math.isfinite(denom) and mv > 0:
         return mv / denom
     return 1.0
-
-
-def mass_matched_x0(
-    graph: GraphTables,
-    x0: DataFrame,
-    mv: float,
-    alpha: float,
-    fill: float,
-) -> DataFrame:
-    """Dense warm-start iterate (id, x) from a previous snapshot's vector:
-    vertices missing from ``x0`` (urls new in this snapshot) start at the
-    cold value ``fill``, then the whole vector is scaled by
-    :func:`warm_scale`. Used by pagerank_csr; pagerank computes the same
-    m0/d0 in its state-table prologue."""
-    xcol = "rank" if "rank" in x0.columns else "x"
-    x = graph.vertices.select("id").join(
-        x0.select("id", F.col(xcol).cast("double").alias("_x0")).hint(
-            "shuffle_hash"
-        ),
-        "id",
-        "left",
-    ).select(
-        "id",
-        F.coalesce(F.col("_x0"), F.lit(fill).cast("double")).alias("x"),
-    ).localCheckpoint(eager=False)
-    # d0 = Σx over rows with no has-out-edge probe hit. The probe comes from
-    # the EDGE table: a vertices-derived dangling set shares x's exprIds, and
-    # the self-join dedup then fails ("conflicting references") under hints.
-    has_out = graph.edges.select(F.col("src_id").alias("id")).distinct()
-    row0 = (
-        x.join(
-            has_out.withColumn("_out", F.lit(1)).hint("shuffle_hash"),
-            "id",
-            "left",
-        )
-        .agg(
-            F.sum("x").alias("m0"),
-            F.coalesce(
-                F.sum(F.when(F.col("_out").isNull(), F.col("x"))), F.lit(0.0)
-            ).alias("d0"),
-        )
-        .collect()[0]
-    )
-    s = warm_scale(float(row0["m0"]), float(row0["d0"]), mv, alpha)
-    return x.select("id", (F.col("x") * F.lit(s)).alias("x"))
 
 
 def pagerank(
@@ -195,7 +150,6 @@ def pagerank(
     checkpointer=None,
     checkpoint_every: int = 10,
     verbose: bool = False,
-    iters_per_action: int = 1,
     x0: DataFrame | None = None,
 ) -> PageRankResult:
     """Run the power method on a built graph.
@@ -210,11 +164,6 @@ def pagerank(
        final) to break extreme hub keys across reducers.
     checkpointer: optional operators.checkpoint.IterationCheckpointer for
        durable per-iteration state + lineage (resume supported).
-    iters_per_action: fuse this many power steps into one Spark action.
-       Inner steps compute β JVM-side (1-row dangling aggregate broadcast
-       into the iterate); numerics are identical, but the ε-stop (and
-       residual reporting) happens once per batch — keep the default 1 when
-       reference iteration-count parity matters.
     x0: optional warm-start iterate (id, rank|x) — typically the previous
        snapshot's converged ranks after operators.incremental.update_graph,
        or a checkpointer.resume() state from a DIFFERENT run. Ids outside the
@@ -236,7 +185,6 @@ def pagerank(
         salt_partitions=salt_partitions,
         checkpointer=checkpointer,
         checkpoint_every=checkpoint_every,
-        iters_per_action=iters_per_action,
         x0=x0,
     )
     return PageRankResult(
@@ -295,21 +243,18 @@ def _power_method(
     salt_partitions: int | None = None,
     checkpointer=None,
     checkpoint_every: int = 10,
-    iters_per_action: int = 1,
     x0: DataFrame | None = None,
 ) -> tuple[DataFrame, int, bool, list[list[float]], list[IterationMetrics]]:
     """The one power-method loop: column i of the state table is the
     iterate for the i-th vector of ``vs`` (None: uniform). Returns the final
     state (id, v_i, dang, x_i, xp_i), the iteration count, whether the
-    largest residual fell below ε, per-column residuals and per-action
+    largest residual fell below ε, per-column residuals and per-iteration
     metrics. ``x0`` and ``checkpointer`` hold one column's state, so only a
     single vector may use them."""
     spark = graph.edges.sparkSession
     n = graph.n
     if n == 0:
         raise ValueError("empty graph")
-    if iters_per_action < 1:
-        raise ValueError("iters_per_action must be >= 1")
 
     edges = graph.edges  # (src_id, dst_id, weight) persisted, hashed by src_id
     cols = range(len(vs))
@@ -332,8 +277,9 @@ def _power_method(
     # table's src_id partitions, so the pin's one exchange moves O(V) rows.
     # Under AQE (get_spark's default) no checkpoint carries partitioning, so
     # each iteration re-shuffles the state. Plain localCheckpoint is safe:
-    # the loop's Aggregate barriers clamp the inherited-sizeInBytes squaring
-    # that forces the CSR kernel to cut_lineage (lineage.py doc).
+    # an iteration multiplies the state's inherited sizeInBytes by the edge
+    # table's, never by a second copy of the state, so its bit-length grows
+    # linearly instead of doubling (lineage.py doc).
     rows = graph.vertices.select(
         "id",
         F.lit(True).alias("g"),
@@ -412,9 +358,6 @@ def _power_method(
         *[(x_start[i] * F.lit(scales[i])).alias(f"x_{i}") for i in cols],
     )
 
-    def dang_sum(i):
-        return F.coalesce(F.sum(F.when(F.col("dang"), F.col(f"x_{i}"))), F.lit(0.0))
-
     residuals: list[list[float]] = [[] for _ in cols]
     metrics: list[IterationMetrics] = []
     converged = False
@@ -422,72 +365,56 @@ def _power_method(
     done = start_iter
     while done < max_iterations and not converged:
         t0 = time.monotonic()
-        batch = min(iters_per_action, max_iterations - done)
-        for sub in range(batch):
-            # P^T x: SHUFFLE_HASH on the iterate — edges stay put (hashed by
-            # src_id), the O(V·K) iterate shuffles + hash-builds per partition
-            # (never broadcast — see module doc)
-            xh = x.select("id", *xcols).hint("shuffle_hash")
-            contribs = edges.join(xh, edges.src_id == xh.id).select(
-                F.col("dst_id").alias("id"),
-                *[(F.col("weight") * F.col(f"x_{i}")).alias(f"wx_{i}") for i in cols],
+        # P^T x: SHUFFLE_HASH on the iterate — edges stay put (hashed by
+        # src_id), the O(V·K) iterate shuffles + hash-builds per partition
+        # (never broadcast — see module doc)
+        xh = x.select("id", *xcols).hint("shuffle_hash")
+        contribs = edges.join(xh, edges.src_id == xh.id).select(
+            F.col("dst_id").alias("id"),
+            *[(F.col("weight") * F.col(f"x_{i}")).alias(f"wx_{i}") for i in cols],
+        )
+        if salt_partitions:
+            # salt derived from the *source* side so one hot dst_id fans
+            # out across `salt_partitions` partial-agg keys first
+            contribs = (
+                contribs.withColumn(
+                    "_salt",
+                    F.pmod(F.spark_partition_id(), F.lit(salt_partitions)),
+                )
+                .groupBy("id", "_salt")
+                .agg(*[F.sum(f"wx_{i}").alias(f"wx_{i}") for i in cols])
+                .drop("_salt")
             )
-            if salt_partitions:
-                # salt derived from the *source* side so one hot dst_id fans
-                # out across `salt_partitions` partial-agg keys first
-                contribs = (
-                    contribs.withColumn(
-                        "_salt",
-                        F.pmod(F.spark_partition_id(), F.lit(salt_partitions)),
-                    )
-                    .groupBy("id", "_salt")
-                    .agg(*[F.sum(f"wx_{i}").alias(f"wx_{i}") for i in cols])
-                    .drop("_salt")
-                )
-            step = (
-                contribs.unionByName(
-                    x.select("id", *vcols, "dang", *xcols), allowMissingColumns=True
-                )
-                .groupBy("id")
-                .agg(
-                    *[F.sum(f"wx_{i}").alias(f"c_{i}") for i in cols],
-                    *[F.max(f"v_{i}").alias(f"v_{i}") for i in cols],
-                    F.max("dang").alias("dang"),
-                    *[F.max(f"x_{i}").alias(f"xp_{i}") for i in cols],
-                )
+        step = (
+            contribs.unionByName(
+                x.select("id", *vcols, "dang", *xcols), allowMissingColumns=True
             )
-            if sub == 0:
-                # β from the dangling mass the previous action computed
-                betas = [F.lit(alpha * dm + (1.0 - alpha)) for dm in dang_mass]
-            else:
-                # inner steps of a fused batch: β stays JVM-side — 1-row
-                # dangling-mass aggregate broadcast-crossed into the iterate
-                step = step.crossJoin(
-                    F.broadcast(x.agg(*[dang_sum(i).alias(f"_dm_{i}") for i in cols]))
-                )
-                betas = [
-                    F.lit(alpha) * F.col(f"_dm_{i}") + F.lit(1.0 - alpha) for i in cols
-                ]
-            x = step.select(
-                "id",
-                *vcols,
-                "dang",
-                *[
-                    (
-                        betas[i] * (F.col(f"v_{i}") / F.lit(norms[i]))
-                        + F.lit(alpha) * F.coalesce(F.col(f"c_{i}"), F.lit(0.0))
-                    ).alias(f"x_{i}")
-                    for i in cols
-                ],
-                *[f"xp_{i}" for i in cols],
-            ).localCheckpoint(eager=False)
-            # lazy on purpose: fused batches do not recompute the iterate, and
-            # eager intermediate jobs would only serialize the batch
+            .groupBy("id")
+            .agg(
+                *[F.sum(f"wx_{i}").alias(f"c_{i}") for i in cols],
+                *[F.max(f"v_{i}").alias(f"v_{i}") for i in cols],
+                F.max("dang").alias("dang"),
+                *[F.max(f"x_{i}").alias(f"xp_{i}") for i in cols],
+            )
+        )
+        # β from the dangling mass the previous action computed
+        betas = [alpha * dm + (1.0 - alpha) for dm in dang_mass]
+        x = step.select(
+            "id",
+            *vcols,
+            "dang",
+            *[
+                (
+                    F.lit(betas[i]) * (F.col(f"v_{i}") / F.lit(norms[i]))
+                    + F.lit(alpha) * F.coalesce(F.col(f"c_{i}"), F.lit(0.0))
+                ).alias(f"x_{i}")
+                for i in cols
+            ],
+            *[f"xp_{i}" for i in cols],
+        ).localCheckpoint(eager=False)
 
-        # the one action per batch: per-column residual (between the batch's
-        # last two iterates — reference stop semantics at batch granularity)
-        # + the next batch's dangling masses; materializes every fused
-        # checkpoint
+        # the one action per iteration: per-column residual + the next
+        # iteration's dangling masses; it also materializes the checkpoint
         row = x.agg(
             *[
                 F.sqrt(
@@ -498,16 +425,21 @@ def _power_method(
                 ).alias(f"r_{i}")
                 for i in cols
             ],
-            *[dang_sum(i).alias(f"dm_{i}") for i in cols],
+            *[
+                F.coalesce(
+                    F.sum(F.when(F.col("dang"), F.col(f"x_{i}"))), F.lit(0.0)
+                ).alias(f"dm_{i}")
+                for i in cols
+            ],
         ).collect()[0]
         for i in cols:
             residuals[i].append(float(row[f"r_{i}"]))
         dang_mass = [float(row[f"dm_{i}"]) for i in cols]
         residual = max(r[-1] for r in residuals)
-        done += batch
+        done += 1
 
         wall_ms = (time.monotonic() - t0) * 1000.0
-        metrics.append(IterationMetrics(done - 1, residual, wall_ms / batch))
+        metrics.append(IterationMetrics(done - 1, residual, wall_ms))
         if verbose:
             print(f"i={done - 1} residual={residual}")
 

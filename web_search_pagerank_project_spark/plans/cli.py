@@ -8,7 +8,7 @@ Usage (same flags as the reference, so a user can switch 1:1):
 
 Extra engine flags: --master, --partitions, --checkpoint_dir, --algorithm
 (pagerank | components | labelprop | triangles | hits | kcore | scc |
-bowtie), --kernel (dataframe | csr), --k (kcore threshold).
+bowtie), --k (kcore threshold).
 """
 
 from __future__ import annotations
@@ -69,13 +69,6 @@ def build_parser() -> argparse.ArgumentParser:
         default=2,
         help="k for --algorithm kcore (within-core degree threshold)",
     )
-    parser.add_argument(
-        "--kernel",
-        default="dataframe",
-        choices=["dataframe", "csr"],
-        help="PageRank execution kernel: declarative join+agg, or the "
-        "per-partition CSR block fast path (operators/csr_kernel.py)",
-    )
     parser.add_argument("--output", default=None, help="optional parquet sink")
     parser.add_argument(
         "--synonyms_file",
@@ -115,7 +108,6 @@ def main(argv: list[str] | None = None) -> None:
             max_results=args.max_results,
             checkpointer=ckpt,
             verbose=args.verbose,
-            kernel=args.kernel,
             synonyms_file=args.synonyms_file,
         )
     else:

@@ -76,12 +76,6 @@ def search(
     )
 
 
-def _csr_pagerank(graph, v=None, **kw):
-    from ..operators.csr_kernel import pagerank_csr
-
-    return pagerank_csr(graph, v, **kw)
-
-
 def run_pipeline(
     spark: SparkSession,
     data: str,
@@ -94,7 +88,6 @@ def run_pipeline(
     max_results: int = 10,
     checkpointer=None,
     verbose: bool = False,
-    kernel: str = "dataframe",
     synonyms_file: str | None = None,
 ) -> DataFrame:
     """Reference CLI pipeline, returns the search result DataFrame and logs
@@ -112,8 +105,7 @@ def run_pipeline(
         if personalization_vector_query is not None
         else None
     )
-    pr = pagerank if kernel == "dataframe" else _csr_pagerank
-    result = pr(
+    result = pagerank(
         graph,
         v,
         alpha=alpha,

@@ -131,6 +131,12 @@ def synth_pages(
     return ids.mapInPandas(gen, schema=PAGES_SCHEMA)
 
 
+def _seed_offset(seed: int) -> np.uint64:
+    """seed * an odd constant, wrapped mod 2**64 as a Python int: a numpy
+    scalar multiply wraps identically but warns on overflow."""
+    return np.uint64(seed * 0x2545F4914F6CDD1D % (1 << 64))
+
+
 def synth_edges(
     spark: SparkSession,
     n_vertices: int = 10_000,
@@ -147,6 +153,7 @@ def synth_edges(
     ids = spark.range(0, n_edges, 1, num_partitions)
 
     schema = "src string, dst string" if as_urls else "src long, dst long"
+    offset = _seed_offset(seed)
 
     def _splitmix64(x: np.ndarray) -> np.ndarray:
         # deterministic per-edge hash — vectorized, batch-independent
@@ -159,7 +166,7 @@ def synth_edges(
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             eids = pdf["id"].to_numpy().astype(np.uint64)
-            base = eids + np.uint64(seed) * np.uint64(0x2545F4914F6CDD1D)
+            base = eids + offset
             h1 = _splitmix64(base)
             h2 = _splitmix64(base ^ np.uint64(0xD1B54A32D192ED03))
             u1 = (h1 >> np.uint64(11)).astype(np.float64) / float(1 << 53)
